@@ -1,16 +1,23 @@
-"""Two-phase sketch aggregation over DataFrames.
+"""Sketch aggregation over DataFrames.
 
-The structural match to the reference's update/merge split (SURVEY.md
-§3.2): the map side builds one compact sketch image per (grouping key x
-Arrow batch) — the ``update`` path — and only those bounded-size binary
-images cross the shuffle; the reduce side unions images per key — the
-``merge`` path (theta/UnionImpl.java:300).  Raw rows never shuffle.
+Every aggregate keeps the reference's update/merge split (SURVEY.md
+§3.2): the map side builds one bounded-size sketch per grouping key
+and partition, only those images cross the shuffle, and the reduce
+side merges them (theta/UnionImpl.java:300).  Raw rows never shuffle,
+so shuffle volume is O(#keys x #partitions x sketch_size),
+independent of row count.
 
-At 100 TB this is the only viable shape: shuffle volume is
-O(#keys x #partitions x sketch_size), independent of row count.
-Implemented with mapInPandas (partial) + groupBy().applyInPandas
-(final) so every step is Arrow-batched; no per-row Python anywhere
-(BASELINE.json input_hint).
+Two implementations of that shape:
+
+- theta, HLL and KLL use Spark's built-in DataSketches aggregates
+  (``theta_sketch_agg``, ``theta_union_agg``, ``hll_sketch_agg``,
+  ``kll_sketch_agg_double``; datasketches-java in the JVM, map-side
+  partial aggregation, no Python worker).  Their images are the
+  reference's compact images, which the engine's ``sketches.theta``,
+  ``hll`` and ``kll`` read and write; the scalar UDFs below read them.
+- frequent items, REQ, CPC, tuple and sampling, which Spark lacks, use
+  ``_two_phase``: mapInPandas (partial) + groupBy().applyInPandas
+  (final), Arrow-batched, no per-row Python.
 """
 
 from __future__ import annotations
@@ -36,14 +43,18 @@ from ..sketches.sampling import PrioritySample, ReservoirSketch
 _GLOBAL_KEY = "__ds_global__"
 
 
-def _utf8_flat(strings: pd.Series, binary: bool = False):
-    """pandas string/bytes Series → (flat uint8 buffer, starts,
-    lengths) via the Arrow string/binary layout — no per-row Python;
-    feeds the batch murmur3 (same flat-buffer trick as minhash_flat)."""
+def _utf8_flat(strings):
+    """pandas string Series or Arrow string/binary array → (flat uint8
+    buffer, starts, lengths) via the Arrow string/binary layout — no
+    per-row Python; feeds the batch murmur3 (same flat-buffer trick as
+    minhash_flat)."""
     import pyarrow as pa
-    a = pa.array(strings, type=pa.binary() if binary else pa.string())
+    a = strings if isinstance(strings, pa.Array) else pa.array(strings, pa.string())
+    if len(a) == 0:
+        return np.empty(0, np.uint8), np.empty(0, np.int64), np.empty(0, np.int64)
+    large = pa.types.is_large_string(a.type) or pa.types.is_large_binary(a.type)
     bufs = a.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int32)[
+    offsets = np.frombuffer(bufs[1], dtype=np.int64 if large else np.int32)[
         a.offset: a.offset + len(a) + 1].astype(np.int64)
     data = (np.frombuffer(bufs[2], dtype=np.uint8)
             if bufs[2] is not None else np.empty(0, np.uint8))
@@ -83,67 +94,79 @@ def _two_phase(df: DataFrame, by: list[str], value_cols: list[str],
 
 
 # ---------------------------------------------------------------------------
-# theta
+# theta, HLL and KLL: Spark's built-in DataSketches aggregates
 # ---------------------------------------------------------------------------
 
-def theta_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                     lg_k: int = DEFAULT_LG_K,
-                     seed: int = DEFAULT_UPDATE_SEED,
-                     prehashed: bool = False,
-                     p: float = 1.0) -> DataFrame:
-    """groupBy(by).agg(theta_sketch(col)) -> by + theta_sketch:binary.
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
-    Integral columns hash as update(long); STRING columns hash their
-    UTF-8 bytes with the batch murmur3 (null/empty rejected) — exactly
-    theta/UpdateSketch.java:255 — and BINARY columns hash raw bytes
-    (update(byte[]), :271; raw-media exact-dedup keys), so sketches
-    built here are hash-equal to reference sketches of the same items
-    (cross-system set operations work).  If ``prehashed`` the column
-    already holds 63-bit update hashes (the union "backdoor",
-    theta/UnionImpl.java:328).  ``p`` is the builder's up-front
-    sampling probability (UpdateSketchBuilder.setP).
-    """
-    from ..sketches.murmur3 import theta_hash_bytes_batch
-    by = by or []
+
+def _native_input(df: DataFrame, col: str, agg: str,
+                  accepted: tuple) -> F.Column:
+    """``col`` as the built-in ``agg`` takes it: narrow integers widen
+    to BIGINT (update(long), as the reference hashes them); a type the
+    built-in rejects raises TypeError here, from the schema, before any
+    plan is analysed."""
     dt = df.schema[col].dataType
-    is_string = isinstance(dt, T.StringType)
-    is_binary = isinstance(dt, T.BinaryType)
+    if not isinstance(dt, accepted):
+        raise TypeError(f"{agg} takes {', '.join(t.typeName() for t in accepted)} "
+                        f"columns, not {dt.simpleString()} ({col!r})")
+    c = F.col(col)
+    return c.cast("bigint") if isinstance(dt, (T.ByteType, T.ShortType)) else c
 
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if prehashed:
-            sk = theta.from_update_hashes(
-                vals.to_numpy().astype(np.uint64), lg_k, seed, p)
-        elif is_string or is_binary:
-            # empty rejected (UpdateSketch.java:255,271)
-            vals = vals[vals.map(len) > 0] if is_binary else vals[vals != ""]
-            flat, starts, lengths = _utf8_flat(vals, binary=is_binary)
-            uh = theta_hash_bytes_batch(flat, starts, lengths, seed)
-            sk = theta.from_update_hashes(uh, lg_k, seed, p)
-        else:
-            sk = theta.sketch_longs(
-                vals.to_numpy().astype(np.int64), lg_k, seed, p)
-        return sk.to_bytes()
 
-    def merge(imgs: list[bytes]) -> bytes:
-        return theta.union_many([theta.ThetaSketch.from_bytes(b) for b in imgs]).to_bytes()
+def theta_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
+                     lg_k: int = DEFAULT_LG_K) -> DataFrame:
+    """groupBy(by).agg(theta_sketch(col)) -> by + theta_sketch:binary,
+    with Spark's built-in ``theta_sketch_agg`` (datasketches-java
+    UpdateSketch, map-side partial aggregation, no Python worker).
 
-    return _two_phase(df, by, [col], build, merge, "theta_sketch")
+    Integral columns hash as update(long), DOUBLE and FLOAT columns as
+    update(double) (canonical bits, theta.sketch_doubles), STRING
+    columns their UTF-8 bytes and BINARY columns their raw bytes
+    (theta/UpdateSketch.java:220-271; null and empty rejected), so the
+    images are hash-equal to the engine's and the reference's sketches
+    of the same items.  The image is the reference's compact image,
+    serVer 4 (compressed) from two entries up.
+    """
+    c = _native_input(df, col, "theta_sketch_agg",
+                      _INTEGRAL + (T.FloatType, T.DoubleType,
+                                   T.StringType, T.BinaryType))
+    return df.groupBy(*(by or [])).agg(
+        F.theta_sketch_agg(c, lg_k).alias("theta_sketch"))
 
 
 def theta_union_agg(df: DataFrame, sketch_col: str = "theta_sketch",
-                    by: list[str] | None = None) -> DataFrame:
-    """Merge an existing sketch column (checkpoint resume path)."""
-    by = by or []
+                    by: list[str] | None = None,
+                    lg_k: int = DEFAULT_LG_K) -> DataFrame:
+    """Merge an existing sketch column (checkpoint resume path) with
+    Spark's built-in ``theta_union_agg``.  As in the reference's union,
+    the nominal size ``lg_k`` is the union's own.  The engine's legacy
+    private images are rejected (THETA_INVALID_INPUT_SKETCH_BUFFER);
+    ``theta_to_java`` upgrades them once."""
+    return df.groupBy(*(by or [])).agg(
+        F.theta_union_agg(sketch_col, lg_k).alias(sketch_col))
 
-    def build(grp: pd.DataFrame) -> bytes:
-        return theta.union_many(
-            [theta.ThetaSketch.from_bytes(b) for b in grp[sketch_col]]).to_bytes()
 
-    def merge(imgs: list[bytes]) -> bytes:
-        return theta.union_many([theta.ThetaSketch.from_bytes(b) for b in imgs]).to_bytes()
+def _image_udf(name: str, read: Callable[[bytes], object], doc: str) -> Callable:
+    """Scalar UDF ``name``: any readable image of a family -> the
+    reference image the engine writes (``read(b).to_bytes()``)."""
+    def normalise(images: pd.Series) -> pd.Series:
+        return images.map(lambda b: read(b).to_bytes())
+    normalise.__name__ = normalise.__qualname__ = name
+    normalise.__doc__ = doc
+    return F.pandas_udf(T.BinaryType())(normalise)
 
-    return _two_phase(df, by, [sketch_col], build, merge, sketch_col)
+
+theta_to_java = _image_udf(
+    "theta_to_java", theta.ThetaSketch.from_bytes,
+    "Any readable theta image (reference serVer 1-4, or the engine's "
+    "legacy private image) -> the reference serVer-3 compact-ordered "
+    "image.  Run it once over an old ``theta_state`` table to upgrade "
+    "it for the built-in union.")
+theta_from_java = _image_udf(
+    "theta_from_java", theta.ThetaSketch.from_bytes,
+    "Same normaliser as theta_to_java: every image the engine reads "
+    "comes out as the reference serVer-3 image.")
 
 
 @F.pandas_udf(T.DoubleType())
@@ -151,24 +174,6 @@ def theta_estimate(images: pd.Series) -> pd.Series:
     """Distinct-count estimate from a theta image column
     (theta/Sketch.java:264 count/theta estimator)."""
     return images.map(lambda b: theta.ThetaSketch.from_bytes(b).estimate())
-
-
-@F.pandas_udf(T.BinaryType())
-def theta_to_java(images: pd.Series) -> pd.Series:
-    """Engine image → reference serVer-3 compact-ordered image
-    (interop export; theta/PreambleUtil.java:28-133 layout)."""
-    from ..sketches import theta_serde
-    return images.map(
-        lambda b: theta_serde.to_java_bytes(theta.ThetaSketch.from_bytes(b)))
-
-
-@F.pandas_udf(T.BinaryType())
-def theta_from_java(images: pd.Series) -> pd.Series:
-    """Reference serVer-3 compact image → engine image (heapify
-    counterpart, theta/Sketch.java:70)."""
-    from ..sketches import theta_serde
-    return images.map(
-        lambda b: theta_serde.from_java_bytes(b).to_bytes())
 
 
 @F.pandas_udf(T.DoubleType())
@@ -198,7 +203,8 @@ theta_intersect_pair = _theta_pair_udf(theta.intersect)
 theta_a_not_b_pair = _theta_pair_udf(theta.a_not_b)
 theta_union_pair.__doc__ = (
     "Pairwise union of two theta image columns (theta-rule, "
-    "theta/UnionImpl.java:300) -> new image column.")
+    "theta/UnionImpl.java:300; nominal size the larger input's) -> "
+    "new image column.")
 theta_intersect_pair.__doc__ = (
     "Pairwise intersection of two theta image columns "
     "(theta/IntersectionImpl counterpart) -> new image column.")
@@ -216,34 +222,18 @@ def theta_jaccard_pair(a: pd.Series, b: pd.Series) -> pd.Series:
         for x, y in zip(a, b)])
 
 
-# ---------------------------------------------------------------------------
-# HLL
-# ---------------------------------------------------------------------------
-
 def hll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                   lg_k: int = HLL_DEFAULT_LG_K,
-                   seed: int = DEFAULT_UPDATE_SEED) -> DataFrame:
-    """String columns hash their UTF-8 bytes with the batch murmur3
-    (hll/BaseHllSketch.java:292 update(String) parity); integral
-    columns hash as update(long)."""
-    from ..sketches.murmur3 import hash128_bytes_batch
-    by = by or []
-    is_string = isinstance(df.schema[col].dataType, T.StringType)
-
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if is_string:
-            vals = vals[vals != ""]
-            flat, starts, lengths = _utf8_flat(vals)
-            h1, h2 = hash128_bytes_batch(flat, starts, lengths, seed)
-            return hll.from_hash_pair(h1, h2, lg_k, seed).to_bytes()
-        return hll.sketch_longs(
-            vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        return hll.union_many([hll.HllSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "hll_sketch")
+                   lg_k: int = HLL_DEFAULT_LG_K) -> DataFrame:
+    """groupBy(by).agg(hll_sketch(col)) -> by + hll_sketch:binary, with
+    Spark's built-in ``hll_sketch_agg`` (the reference's HLL_8 image).
+    Integral columns hash as update(long), STRING columns their UTF-8
+    bytes and BINARY columns their raw bytes
+    (hll/BaseHllSketch.java:292); the built-in takes no FLOAT or DOUBLE
+    column, so those raise TypeError."""
+    c = _native_input(df, col, "hll_sketch_agg",
+                      _INTEGRAL + (T.StringType, T.BinaryType))
+    return df.groupBy(*(by or [])).agg(
+        F.hll_sketch_agg(c, lg_k).alias("hll_sketch"))
 
 
 @F.pandas_udf(T.DoubleType())
@@ -254,8 +244,9 @@ def hll_estimate(images: pd.Series) -> pd.Series:
 
 
 def hll_to_java(tgt_type: str = "hll8") -> Callable:
-    """Engine image → reference HLL image at the chosen target type
-    ('hll4' | 'hll6' | 'hll8'; hll/ToByteArrayImpl counterpart)."""
+    """Any readable HLL image -> the reference HLL image at the chosen
+    target type ('hll4' | 'hll6' | 'hll8'; hll/ToByteArrayImpl
+    counterpart)."""
     if tgt_type not in ("hll4", "hll6", "hll8"):  # fail at call time,
         raise ValueError(f"tgt_type must be hll4/hll6/hll8: {tgt_type}")
 
@@ -269,36 +260,20 @@ def hll_to_java(tgt_type: str = "hll8") -> Callable:
     return enc
 
 
-@F.pandas_udf(T.BinaryType())
-def hll_from_java(images: pd.Series) -> pd.Series:
-    """ANY reference HLL image (HLL_4/6/8, LIST/SET modes) → engine
-    image (hll/HllSketch.heapify counterpart)."""
-    from ..sketches import hll_serde
-    return images.map(lambda b: hll_serde.from_java_bytes(b).to_bytes())
+hll_from_java = _image_udf(
+    "hll_from_java", hll.HllSketch.from_bytes,
+    "Any readable HLL image (HLL_4/6/8, LIST/SET modes, or the engine's "
+    "legacy private image) -> the reference HLL_8 image.")
 
-
-# ---------------------------------------------------------------------------
-# KLL
-# ---------------------------------------------------------------------------
 
 def kll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
                    k: int = KLL_DEFAULT_K) -> DataFrame:
-    """groupBy(by).agg(kll_sketch(col)) -> by + kll_sketch:binary —
-    two-phase KLL doubles aggregation (kll/KllDoublesSketch update +
-    merge split across partial/final)."""
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return KllDoublesSketch.new(k).update_batch(
-            grp[col].dropna().to_numpy().astype(np.float64)).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = KllDoublesSketch.new(k)
-        for b in imgs:
-            out.merge(KllDoublesSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "kll_sketch")
+    """groupBy(by).agg(kll_sketch(col)) -> by + kll_sketch:binary, with
+    Spark's built-in ``kll_sketch_agg_double`` over the column cast to
+    DOUBLE (the reference's compact KLL doubles image)."""
+    c = _native_input(df, col, "kll_sketch_agg", (T.NumericType,))
+    return df.groupBy(*(by or [])).agg(
+        F.kll_sketch_agg_double(c.cast("double"), k).alias("kll_sketch"))
 
 
 def kll_items_sketch_agg(df: DataFrame, col: str,
@@ -329,22 +304,14 @@ def kll_items_sketch_agg(df: DataFrame, col: str,
     return _two_phase(df, by, [col], build, merge, "kll_items_sketch")
 
 
-@F.pandas_udf(T.BinaryType())
-def kll_to_java(images: pd.Series) -> pd.Series:
-    """Engine KLL-doubles image → reference compact image
-    (kll/KllPreambleUtil.java layout)."""
-    from ..sketches import kll_serde
-    return images.map(
-        lambda b: kll_serde.to_java_bytes(KllDoublesSketch.from_bytes(b)))
-
-
-@F.pandas_udf(T.BinaryType())
-def kll_from_java(images: pd.Series) -> pd.Series:
-    """Reference KLL compact image (doubles or floats) → engine image;
-    classic-quantiles legacy images route via kll_serde.
-    classic_doubles_from_java_bytes."""
-    from ..sketches import kll_serde
-    return images.map(lambda b: kll_serde.from_java_bytes(b).to_bytes())
+kll_to_java = _image_udf(
+    "kll_to_java", KllDoublesSketch.from_bytes,
+    "Any readable KLL doubles image (reference compact, or the engine's "
+    "legacy private image) -> the reference compact doubles image.")
+kll_from_java = _image_udf(
+    "kll_from_java", KllDoublesSketch.from_bytes,
+    "Same normaliser as kll_to_java.  Classic-quantiles images are read "
+    "by kll_serde.classic_doubles_from_java_bytes, not here.")
 
 
 def kll_items_to_java(dtype: str = "long") -> Callable:

@@ -15,12 +15,17 @@ the Spark engine the same entry point::
 
 SCALE BOUNDARY — read before using the *_build aggregates at 100 TB:
 Spark cannot express partial aggregation for Python UDAFs, so a
-registered GROUPED_AGG pandas UDF ships RAW VALUES to the reducer
+registered GROUPED_AGG UDF ships RAW VALUES to the reducer
 (``AggregateInPandasExec`` has no map-side combine).  Results are
-identical at any scale, but shuffle volume is O(rows), not the
-O(groups x partitions x sketch_size) of the DataFrame-API two-phase
-aggs in ``functions/sketch_aggs.py`` — those remain the scale path
-for BUILDING sketches.  Two SQL patterns carry no such penalty:
+identical at any scale, but shuffle volume is O(rows).  The DataFrame
+builds in ``functions/sketch_aggs.py`` are the scale path for BUILDING
+sketches: theta, HLL and KLL there are Spark's built-in DataSketches
+aggregates (map-side partial aggregation, no Python worker), the other
+families two-phase aggregates with O(groups x partitions x
+sketch_size) shuffle.  In SQL text the same built-ins are available
+directly (``theta_sketch_agg``, ``hll_sketch_agg``,
+``kll_sketch_agg_double``), and their images are what the scalars
+below read.  Two SQL patterns carry no penalty:
 
 - QUERYING sketch images (``theta_sketch_estimate``, ``kll_sketch_
   quantile``, the pairwise set ops): scalar Arrow-batched UDFs over
@@ -39,6 +44,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..config import (
@@ -50,48 +57,64 @@ from ..config import (
 )
 from ..sketches import cpc, hll, theta
 from ..sketches.frequencies import ItemsSketch
+from ..sketches.hash_adaptors import canonical_double_bits
 from ..sketches.kll import KllDoublesSketch
 from . import sketch_aggs as A
 from .sketch_aggs import _utf8_flat
 
 
-def _kind(vals: pd.Series) -> str:
-    """'binary' | 'string' | 'long' from the values actually present
-    (SQL registration has no declared input type to dispatch on)."""
-    if vals.dtype == object or pd.api.types.is_string_dtype(vals):
-        for v in vals:
-            return "binary" if isinstance(v, (bytes, bytearray)) else "string"
-        return "string"
-    return "long"
+def _update_keys(arr: pa.Array):
+    """What the reference's update() overloads hash, from a column's
+    Arrow type (theta/UpdateSketch.java:220-271): ('bytes', flat
+    buffer triple) for STRING and BINARY, empty values rejected; else
+    ('long', int64 keys) — integral values as update(long), FLOAT and
+    DOUBLE values as update(double)'s canonical bits, so SQL-built
+    sketches stay hash-equal to the DataFrame and reference sketches
+    of the same items.  NULLs are dropped."""
+    arr = arr.drop_null()
+    t = arr.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or \
+            pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        arr = arr.filter(pc.greater(pc.binary_length(arr), 0))
+        return "bytes", _utf8_flat(arr)
+    if pa.types.is_floating(t):
+        return "long", canonical_double_bits(arr.to_numpy(zero_copy_only=False))
+    return "long", arr.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def _theta_build(vals: pd.Series, lg_k: int, seed: int) -> bytes:
+def _theta_build(arr: pa.Array, lg_k: int, seed: int) -> bytes:
     from ..sketches.murmur3 import theta_hash_bytes_batch
-    vals = vals.dropna()
-    kind = _kind(vals)
-    if kind != "long":
-        # empty strings/bytes rejected (UpdateSketch.java:255,271),
-        # matching theta_sketch_agg so SQL-built sketches stay
-        # hash-equal to DataFrame/reference sketches of the same items
-        vals = vals[vals.map(len) > 0]
-        flat, starts, lengths = _utf8_flat(vals, binary=kind == "binary")
-        uh = theta_hash_bytes_batch(flat, starts, lengths, seed)
+    kind, keys = _update_keys(arr)
+    if kind == "bytes":
+        uh = theta_hash_bytes_batch(*keys, seed)
         return theta.from_update_hashes(uh, lg_k, seed).to_bytes()
-    return theta.sketch_longs(
-        vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
+    return theta.sketch_longs(keys, lg_k, seed).to_bytes()
 
 
-def _hll_build(vals: pd.Series, lg_k: int, seed: int) -> bytes:
+def _hll_build(arr: pa.Array, lg_k: int) -> bytes:
     from ..sketches.murmur3 import hash128_bytes_batch
-    vals = vals.dropna()
-    kind = _kind(vals)
-    if kind != "long":
-        vals = vals[vals.map(len) > 0]
-        flat, starts, lengths = _utf8_flat(vals, binary=kind == "binary")
-        h1, h2 = hash128_bytes_batch(flat, starts, lengths, seed)
-        return hll.from_hash_pair(h1, h2, lg_k, seed).to_bytes()
-    return hll.sketch_longs(
-        vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
+    kind, keys = _update_keys(arr)
+    if kind == "bytes":
+        h1, h2 = hash128_bytes_batch(*keys, DEFAULT_UPDATE_SEED)
+        return hll.from_hash_pair(h1, h2, lg_k).to_bytes()
+    return hll.sketch_longs(keys, lg_k).to_bytes()
+
+
+def _cpc_build(arr: pa.Array, seed: int) -> bytes:
+    from ..sketches.murmur3 import hash128_bytes_batch
+    kind, keys = _update_keys(arr)
+    if kind == "bytes":
+        h0, h1 = hash128_bytes_batch(*keys, seed)
+        return cpc.from_hash_pair(h0, h1, cpc.DEFAULT_CPC_LG_K, seed).to_bytes()
+    return cpc.sketch_longs(keys, seed=seed).to_bytes()
+
+
+def _null_safe(f):
+    """f(image, arg) per row, NULL where the image or the argument is."""
+    def rows(imgs: pd.Series, args: pd.Series) -> pd.Series:
+        return pd.Series([None if b is None or pd.isna(x) else f(b, x)
+                          for b, x in zip(imgs, args)], dtype=object)
+    return rows
 
 
 def register_sql_functions(spark: SparkSession,
@@ -103,37 +126,42 @@ def register_sql_functions(spark: SparkSession,
     """Register the sketch SQL functions on ``spark``; returns the
     registered names.  Config (lg_k, k, seed) binds at registration —
     one registry per config, matching the Hive adaptor model where the
-    UDAF instance owns its parameters."""
+    UDAF instance owns its parameters.
 
-    # -- aggregates (GROUPED_AGG; see module docstring scale note) ----
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def theta_sketch_build(v: pd.Series) -> bytes:
+    ``seed`` applies to theta and CPC.  HLL always hashes with the
+    default seed, as the reference's HLL does: its image stores no seed
+    hash, so HLL images of other seeds could not be told apart on
+    merge."""
+
+    # -- aggregates (GROUPED_AGG; see module docstring scale note).
+    # The *_build ones are Arrow UDFs: they dispatch on the column's
+    # Arrow type, which pandas would lose (an integer column with NULLs
+    # arrives as float64).
+    @F.arrow_udf(T.BinaryType())
+    def theta_sketch_build(v: pa.Array) -> bytes:
         return _theta_build(v, lg_k, seed)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def theta_sketch_union(imgs: pd.Series) -> bytes:
         sks = [theta.ThetaSketch.from_bytes(b) for b in imgs.dropna()]
         if not sks:   # all-NULL group (e.g. outer-join side) -> empty
-            return theta.from_update_hashes(
-                np.empty(0, dtype=np.uint64), lg_k, seed).to_bytes()
-        return theta.union_many(sks).to_bytes()
+            return theta.empty(lg_k, seed).to_bytes()
+        return theta.union_many(sks, lg_k).to_bytes()
 
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def hll_sketch_build(v: pd.Series) -> bytes:
-        return _hll_build(v, hll_lg_k, seed)
+    @F.arrow_udf(T.BinaryType())
+    def hll_sketch_build(v: pa.Array) -> bytes:
+        return _hll_build(v, hll_lg_k)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def hll_sketch_union(imgs: pd.Series) -> bytes:
         sks = [hll.HllSketch.from_bytes(b) for b in imgs.dropna()]
         if not sks:
-            return hll.sketch_longs(
-                np.empty(0, dtype=np.int64), hll_lg_k, seed).to_bytes()
+            return hll.empty(hll_lg_k).to_bytes()
         return hll.union_many(sks).to_bytes()
 
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def cpc_sketch_build(v: pd.Series) -> bytes:
-        return cpc.sketch_longs(
-            v.dropna().to_numpy().astype(np.int64), seed=seed).to_bytes()
+    @F.arrow_udf(T.BinaryType())
+    def cpc_sketch_build(v: pa.Array) -> bytes:
+        return _cpc_build(v, seed)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def kll_sketch_build(v: pd.Series) -> bytes:
@@ -155,15 +183,13 @@ def register_sql_functions(spark: SparkSession,
     # -- scalars: parameterized query functions (image, arg) ----------
     @F.pandas_udf(T.DoubleType())
     def kll_sketch_quantile(imgs: pd.Series, rank: pd.Series) -> pd.Series:
-        return pd.Series([
-            KllDoublesSketch.from_bytes(b).quantile(float(r))
-            for b, r in zip(imgs, rank)])
+        return _null_safe(lambda b, r: KllDoublesSketch.from_bytes(b)
+                          .quantile(float(r)))(imgs, rank)
 
     @F.pandas_udf(T.DoubleType())
     def kll_sketch_rank(imgs: pd.Series, x: pd.Series) -> pd.Series:
-        return pd.Series([
-            KllDoublesSketch.from_bytes(b).rank(float(v))
-            for b, v in zip(imgs, x)])
+        return _null_safe(lambda b, v: KllDoublesSketch.from_bytes(b)
+                          .rank(float(v)))(imgs, x)
 
     @F.pandas_udf(T.DoubleType())
     def cpc_sketch_estimate(imgs: pd.Series) -> pd.Series:
@@ -174,11 +200,11 @@ def register_sql_functions(spark: SparkSession,
         T.StructField("estimate", T.LongType())])))
     def frequent_strings_sketch_result(imgs: pd.Series,
                                        threshold: pd.Series) -> pd.Series:
-        return pd.Series([
-            [(it, int(est)) for it, est, _, _ in
-             ItemsSketch.from_bytes(b).frequent_items(
-                 threshold=int(t), error_type="NO_FALSE_POSITIVES")]
-            for b, t in zip(imgs, threshold)])
+        return _null_safe(lambda b, t: [
+            (it, int(est)) for it, est, _, _ in
+            ItemsSketch.from_bytes(b).frequent_items(
+                threshold=int(t), error_type="NO_FALSE_POSITIVES")])(
+            imgs, threshold)
 
     fns = {
         "theta_sketch_build": theta_sketch_build,

@@ -27,9 +27,10 @@ import numpy as np
 from ..config import DEFAULT_UPDATE_SEED, HLL_DEFAULT_LG_K
 from .murmur3 import hash128_u64
 
-_FAMILY_HLL = 7
-_SER_VER = 1
-_HDR = struct.Struct("<BBBBHH")  # family, serVer, flags, lgK, seedHash16, rsvd
+# the engine's retired private image: family, serVer, flags, lgK,
+# seedHash16, rsvd — still read so old images load
+_LEGACY_HDR = struct.Struct("<BBBBHH")
+_LEGACY_FAMILY_SER_VER = b"\x07\x01"
 
 
 def _seed_hash(seed: int) -> int:
@@ -77,16 +78,26 @@ class HllSketch:
                           num_std_dev)
 
     def to_bytes(self) -> bytes:
-        return _HDR.pack(_FAMILY_HLL, _SER_VER, 0, self.lg_k, self.seed_hash, 0) \
-            + self.regs.tobytes()
+        """The reference's HLL_8 image (hll_serde.to_java_bytes).  It
+        stores no seed hash: a read image carries the default seed's,
+        the only seed the reference's HLL hashes with."""
+        from .hll_serde import to_java_bytes
+        return to_java_bytes(self)
 
     @staticmethod
     def from_bytes(buf: bytes) -> "HllSketch":
-        fam, ver, _f, lg_k, sh, _r = _HDR.unpack_from(buf)
-        if fam != _FAMILY_HLL or ver != _SER_VER:
-            raise ValueError(f"bad HLL image family={fam} ver={ver}")
-        regs = np.frombuffer(buf, dtype=np.uint8, count=1 << lg_k, offset=_HDR.size)
-        return HllSketch(lg_k, sh, regs.copy())
+        """Any reference HLL image (HLL_4/6/8, LIST/SET modes — what
+        Spark's HLL aggregates write), or the engine's legacy private
+        image.  The legacy image starts family=7, serVer=1, flags=0; a
+        reference image starts preInts (2, 3 or 10), serVer, family."""
+        buf = bytes(buf)
+        if buf[:2] == _LEGACY_FAMILY_SER_VER and buf[2] == 0:
+            _f, _v, _fl, lg_k, sh, _r = _LEGACY_HDR.unpack_from(buf)
+            regs = np.frombuffer(buf, dtype=np.uint8, count=1 << lg_k,
+                                 offset=_LEGACY_HDR.size)
+            return HllSketch(lg_k, sh, regs.copy())
+        from .hll_serde import from_java_bytes
+        return from_java_bytes(buf)
 
 
 def empty(lg_k: int = HLL_DEFAULT_LG_K, seed: int = DEFAULT_UPDATE_SEED) -> HllSketch:

@@ -33,9 +33,10 @@ import numpy as np
 
 from ..config import KLL_DEFAULT_K
 
-_FAMILY_KLL = 15
-_SER_VER = 1
-_HDR = struct.Struct("<BBBxHHQddI")  # family, serVer, flags, k, numLevels, n, min, max, rsvd
+# the engine's retired private image: family, serVer, flags, k,
+# numLevels, n, min, max, rsvd — still read so old images load
+_LEGACY_HDR = struct.Struct("<BBBxHHQddI")
+_LEGACY_FAMILY = 15
 _RNG_SEED = 137
 
 
@@ -173,20 +174,25 @@ class KllDoublesSketch:
 
     # -- serde ------------------------------------------------------------
     def to_bytes(self) -> bytes:
-        hdr = _HDR.pack(_FAMILY_KLL, _SER_VER, 0, self.k, len(self.levels),
-                        self.n, self.min_value, self.max_value, 0)
-        parts = [hdr]
-        for lv in self.levels:
-            parts.append(struct.pack("<I", lv.shape[0]))
-            parts.append(lv.astype("<f8").tobytes())
-        return b"".join(parts)
+        """The reference's compact doubles image
+        (kll_serde.to_java_bytes)."""
+        from .kll_serde import to_java_bytes
+        return to_java_bytes(self)
 
     @staticmethod
     def from_bytes(buf: bytes) -> "KllDoublesSketch":
-        fam, ver, _f, k, num_levels, n, mn, mx, _r = _HDR.unpack_from(buf)
-        if fam != _FAMILY_KLL or ver != _SER_VER:
+        """A reference compact KLL image, doubles or floats
+        (kll_serde.from_java_bytes), or the engine's legacy private
+        image.  The legacy image starts with family 15; a reference
+        image starts with preInts 2 or 5."""
+        buf = bytes(buf)
+        if buf[0] != _LEGACY_FAMILY:
+            from .kll_serde import from_java_bytes
+            return from_java_bytes(buf)
+        fam, ver, _f, k, num_levels, n, mn, mx, _r = _LEGACY_HDR.unpack_from(buf)
+        if ver != 1:
             raise ValueError(f"bad KLL image family={fam} ver={ver}")
-        off = _HDR.size
+        off = _LEGACY_HDR.size
         levels = []
         for _ in range(num_levels):
             (cnt,) = struct.unpack_from("<I", buf, off)

@@ -10,20 +10,25 @@ kll/KllHelper.java:562-639 (little-endian):
   full        : {preInts=5, serVer=1, famID=15,
                  flags=DOUBLES|LEVEL_ZERO_SORTED, k:short, m=8, 0}
                 n:long @8, minK:short @16, numLevels:byte @18, 0 @19,
-                levels int[numLevels] @20 (start offsets into the item
-                array; the final boundary = retained count is implied
-                and NOT serialized), minItem:double, maxItem:double,
+                levels int[numLevels] @20 (start offsets of each level
+                in an item array of the sketch's total capacity; the
+                final boundary, that capacity, is implied and NOT
+                serialized, so the retained items start at levels[0] =
+                capacity − retained), minItem:double, maxItem:double,
                 then the retained items level by level (level h items
                 carry weight 2^h; levels ≥ 1 sorted by construction,
                 level 0 sorted here and flagged LEVEL_ZERO_SORTED).
 
 Flags: 1=empty, 2=levelZeroSorted, 4=singleItem, 8=doublesSketch,
-16=updatable (KllPreambleUtil.java:157-161).  We write compact doubles
-images only and read compact doubles images (the updatable-memory form
-and float sketches are out of scope; rejected explicitly).  minK is
-our fixed k — the engine never folds k down on merge (merge keeps the
-caller's k), so minK == k is the truthful value for the reference's
-error-reporting use of the field.
+16=updatable (KllPreambleUtil.java:157-161).  datasketches-java 6.x no
+longer sets the doubles bit (Spark's kll_sketch_agg_double image starts
+05 01 0f 00, its float twin too), so the reader tells doubles from
+floats by the image's length.  We write compact doubles images only,
+with the doubles bit set for older readers; the updatable-memory form
+is rejected explicitly.  minK is our fixed k — the engine never
+folds k down on merge (merge keeps the caller's k), so minK == k is
+the truthful value for the reference's error-reporting use of the
+field.
 """
 
 from __future__ import annotations
@@ -47,6 +52,40 @@ _FLAG_DOUBLES = 8
 _FLAG_UPDATABLE = 16
 
 
+def _total_capacity(k: int, num_levels: int) -> int:
+    """Items the reference allots to a sketch of ``num_levels`` levels
+    (KllHelper.computeTotalItemCapacity, levelCapacity and intCapAux:
+    round(k·(2/3)^depth), at least m; depths over 30 in two steps)."""
+    def aux(k: int, depth: int) -> int:
+        return ((2 * k << depth) // 3 ** depth + 1) >> 1
+
+    return sum(max(_M, aux(k, d) if d <= 30 else aux(aux(k, d // 2), d - d // 2))
+               for d in range(num_levels))
+
+
+def _item_width(buf: bytes, flags: int, k: int) -> int:
+    """Bytes per item (8 doubles, 4 floats) of an image whose doubles
+    flag is clear — datasketches-java 6.x sets it for neither type.  A
+    single-item image is the 8-byte preamble plus one item; a full one
+    holds min, max and the retained items, which end its item array of
+    the reference's total capacity, so retained = capacity − levels[0]."""
+    if flags & _FLAG_EMPTY:
+        return 8
+    if flags & _FLAG_SINGLE or buf[1] == _SER_VER_SINGLE:
+        size = len(buf) - 8
+    else:
+        num_levels = buf[18]
+        starts0 = struct.unpack_from("<i", buf, 20)[0]
+        retained = _total_capacity(k, num_levels) - starts0
+        size, rem = divmod(len(buf) - 20 - 4 * num_levels, retained + 2)
+        if rem:
+            size = 0
+    if size not in (4, 8):
+        raise ValueError("cannot tell the KLL image's item width "
+                         f"({len(buf)} bytes)")
+    return size
+
+
 def to_java_bytes(sk: KllDoublesSketch) -> bytes:
     """Serialize to the reference's compact doubles image
     (KllHelper.toCompactByteArrayImpl:562)."""
@@ -63,9 +102,16 @@ def to_java_bytes(sk: KllDoublesSketch) -> bytes:
     levels = [np.sort(lv) for lv in sk.levels]
     while len(levels) > 1 and levels[-1].shape[0] == 0:
         levels.pop()
-    num_levels = len(levels)
     sizes = [lv.shape[0] for lv in levels]
-    starts = np.cumsum([0] + sizes[:-1]).astype("<i4")
+    retained = sum(sizes)
+    # the engine's level capacities round up where the reference's
+    # round to nearest; an empty top level adds room if they differ
+    while _total_capacity(sk.k, len(levels)) < retained:
+        levels.append(np.empty(0, np.float64))
+        sizes.append(0)
+    num_levels = len(levels)
+    base = _total_capacity(sk.k, num_levels) - retained
+    starts = (base + np.cumsum([0] + sizes[:-1])).astype("<i4")
     hdr = struct.pack("<BBBBHBB", _PRE_INTS_FULL, _SER_VER_FULL, _FAMILY_KLL,
                       _FLAG_DOUBLES | _FLAG_L0_SORTED, sk.k, _M, 0)
     body = struct.pack("<qHBB", sk.n, sk.k, num_levels, 0)
@@ -80,17 +126,19 @@ def from_java_bytes(buf: bytes) -> KllDoublesSketch:
     engine's doubles sketch (KllDoublesSketch/KllFloatsSketch.heapify
     counterparts for the compact forms; float items widen losslessly
     to float64, validated on the reference's own
-    kll_sketch_float_one_item_v1.sk golden)."""
+    kll_sketch_float_one_item_v1.sk golden).  The item width comes
+    from the doubles flag when set, else from the image's length
+    (``_item_width``)."""
     if len(buf) < 8:
         raise ValueError("KLL image too short")
     pre_ints, ser_ver, fam, flags, k, m, _u = struct.unpack_from(
         "<BBBBHBB", buf, 0)
     if fam != _FAMILY_KLL:
         raise ValueError(f"family {fam} is not a KLL image (need 15)")
-    is_double = bool(flags & _FLAG_DOUBLES)
-    fmt, width = ("<f8", 8) if is_double else ("<f4", 4)
     if flags & _FLAG_UPDATABLE or ser_ver == 3:
         raise ValueError("updatable-memory KLL format not supported")
+    width = 8 if flags & _FLAG_DOUBLES else _item_width(buf, flags, k)
+    fmt = "<f8" if width == 8 else "<f4"
     if flags & _FLAG_EMPTY:
         return KllDoublesSketch(k, 0, np.inf, -np.inf,
                                 [np.empty(0, np.float64)])

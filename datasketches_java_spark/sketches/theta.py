@@ -42,10 +42,10 @@ from .murmur3 import hash128_u64, theta_hash_u64
 MAX_THETA = np.uint64((1 << 63) - 1)  # Long.MAX_VALUE
 _MAX_THETA_F = float((1 << 63) - 1)
 
-_FAMILY_THETA = 1
-_SER_VER = 1
-_HDR = struct.Struct("<BBBBHHQI4x")  # family, serVer, flags, lgK, seedHash, rsvd, theta, count
-_FLAG_EMPTY = 1
+# the engine's retired private image: family, serVer, flags, lgK,
+# seedHash, rsvd, theta, count — still read so old images load
+_LEGACY_HDR = struct.Struct("<BBBBHHQI4x")
+_LEGACY_FAMILY_SER_VER = b"\x01\x01"
 
 
 def compute_seed_hash(seed: int) -> int:
@@ -101,24 +101,31 @@ class ThetaSketch:
                 binomial_bounds_upper(self.count, self.theta_frac,
                                       num_std_dev, self.is_empty))
 
-    # -- serde (§2.10; PreambleUtil-style versioned header) ------------------
+    # -- serde ------------------------------------------------------------
     def to_bytes(self) -> bytes:
-        flags = _FLAG_EMPTY if self.is_empty else 0
-        hdr = _HDR.pack(
-            _FAMILY_THETA, _SER_VER, flags, self.lg_k,
-            self.seed_hash, 0, int(self.theta), self.count,
-        )
-        return hdr + self.hashes.astype("<u8").tobytes()
+        """The reference's serVer-3 compact-ordered image
+        (theta_serde.to_java_bytes)."""
+        from .theta_serde import to_java_bytes
+        return to_java_bytes(self)
 
     @staticmethod
     def from_bytes(buf: bytes) -> "ThetaSketch":
-        fam, ver, _flags, lg_k, seed_hash, _r, theta, count = _HDR.unpack_from(buf)
-        if fam != _FAMILY_THETA:
-            raise ValueError(f"not a theta sketch image (family={fam})")
-        if ver != _SER_VER:
-            raise ValueError(f"unsupported theta serVer {ver}")
-        hashes = np.frombuffer(buf, dtype="<u8", count=count, offset=_HDR.size)
-        return ThetaSketch(lg_k, seed_hash, np.uint64(theta), hashes.astype(np.uint64))
+        """Any reference compact image (serVer 1-4, including the
+        compressed serVer 4 Spark's theta aggregates write), or the
+        engine's legacy private image.  The legacy image starts
+        family=1, serVer=1, flags<=1; no reference image does, since a
+        reference image starts preLongs, serVer and serVer 1 needs
+        preLongs 3."""
+        buf = bytes(buf)
+        if buf[:2] == _LEGACY_FAMILY_SER_VER and buf[2] <= 1:
+            _f, _v, _fl, lg_k, seed_hash, _r, theta, count = \
+                _LEGACY_HDR.unpack_from(buf)
+            hashes = np.frombuffer(buf, dtype="<u8", count=count,
+                                   offset=_LEGACY_HDR.size)
+            return ThetaSketch(lg_k, seed_hash, np.uint64(theta),
+                               hashes.astype(np.uint64))
+        from .theta_serde import from_java_bytes
+        return from_java_bytes(buf, seed=None)
 
 
 def empty(lg_k: int = DEFAULT_LG_K, seed: int = DEFAULT_UPDATE_SEED) -> ThetaSketch:
@@ -190,7 +197,9 @@ def sketch_doubles(values: np.ndarray, lg_k: int = DEFAULT_LG_K,
 
 
 def _check_seeds(a: ThetaSketch, b: ThetaSketch) -> None:
-    if a.seed_hash != b.seed_hash:
+    """Empty sketches carry no seed hash in the reference image, so
+    they merge with any seed (theta/UnionImpl.java:308 skips them)."""
+    if a.seed_hash != b.seed_hash and not (a.is_empty or b.is_empty):
         raise ValueError(
             f"seed-hash mismatch {a.seed_hash} != {b.seed_hash} "
             "(theta/UnionImpl.java:308 contract)")
@@ -206,27 +215,29 @@ def _trim(s: ThetaSketch, theta: np.uint64) -> np.ndarray:
 
 def union(a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:
     """Theta-rule union (theta/UnionImpl.java:300-358)."""
-    _check_seeds(a, b)
-    lg_k = min(a.lg_k, b.lg_k)
-    theta = min(a.theta, b.theta)
-    merged = np.union1d(_trim(a, theta), _trim(b, theta))
-    merged, theta = _rebuild(merged, theta, lg_k)
-    return ThetaSketch(lg_k, a.seed_hash, theta, merged)
+    return union_many([a, b])
 
 
-def union_many(sketches: list[ThetaSketch]) -> ThetaSketch:
-    """N-way union in one pass (associative+commutative, §3.2)."""
+def union_many(sketches: list[ThetaSketch],
+               lg_k: int | None = None) -> ThetaSketch:
+    """N-way union in one pass (associative+commutative, §3.2).  Like
+    the reference's union, the nominal size is the caller's ``lg_k``.
+    Without one it is the largest of the inputs': compact images store
+    no k, so a read sketch carries a lower bound inferred from its
+    count (theta_serde._lg_k_for_count), and the largest keeps every
+    input's information."""
     if not sketches:
         raise ValueError("union_many of zero sketches")
-    lg_k = min(s.lg_k for s in sketches)
-    seed_hash = sketches[0].seed_hash
-    for s in sketches[1:]:
-        _check_seeds(sketches[0], s)
+    if lg_k is None:
+        lg_k = max(s.lg_k for s in sketches)
+    ref = next((s for s in sketches if not s.is_empty), sketches[0])
+    for s in sketches:
+        _check_seeds(ref, s)
     theta = min(s.theta for s in sketches)
     parts = [_trim(s, theta) for s in sketches]
-    merged = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.uint64)
+    merged = np.unique(np.concatenate(parts))
     merged, theta = _rebuild(merged, theta, lg_k)
-    return ThetaSketch(lg_k, seed_hash, theta, merged)
+    return ThetaSketch(lg_k, ref.seed_hash, theta, merged)
 
 
 def intersect(a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:

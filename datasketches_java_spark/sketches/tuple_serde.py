@@ -246,7 +246,7 @@ def from_java_bytes(buf: bytes, summary: str = "int_java",
         hashes, values, mode_code = _decode_entries(buf, off, count, summary)
         values = values[:, None]
 
-    return TupleSketch(_lg_k_for_count(len(hashes)),
+    return TupleSketch(_lg_k_for_count(len(hashes), theta != MAX_THETA),
                        compute_seed_hash(seed), theta, hashes, values,
                        _MODES_INV.get(mode_code, "Sum"))
 
@@ -307,7 +307,7 @@ def aod_from_java_bytes(buf: bytes,
         values = np.frombuffer(buf, "<f8", count=count * n_values,
                                offset=24 + count * 8
                                ).reshape(count, n_values).copy()
-    return TupleSketch(_lg_k_for_count(len(hashes)),
+    return TupleSketch(_lg_k_for_count(len(hashes), theta != MAX_THETA),
                        compute_seed_hash(seed or DEFAULT_UPDATE_SEED),
                        theta, hashes, values, "Sum")
 

@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..config import DEFAULT_LG_K
 from ..functions.sketch_aggs import theta_sketch_agg, theta_union_agg
 from ..operators.lsh import add_signatures
 
@@ -53,19 +54,27 @@ def incremental_signatures(spark: SparkSession, pages: DataFrame,
 
 def incremental_theta_state(spark: SparkSession, batch: DataFrame,
                             state_dir: str, col: str,
-                            by: list[str], **agg_kw) -> DataFrame:
+                            by: list[str],
+                            lg_k: int = DEFAULT_LG_K) -> DataFrame:
     """Merge a new batch's partial sketches into a persistent per-key
     sketch state table; returns the merged state.
 
     union(state, sketch(batch)) == sketch(state_stream + batch) — the
     associative/commutative merge contract (theta/UnionImpl.java:300)
-    is what lets state live across arbitrary batch boundaries.
+    is what lets state live across arbitrary batch boundaries.  Batch
+    sketches and the merge share the nominal size ``lg_k``.
+
+    The merge is Spark's built-in theta union, which reads reference
+    images only.  A state table written by engine versions with the
+    private theta image needs a one-time upgrade: rewrite its sketch
+    column with ``sketch_aggs.theta_to_java``.
     """
     path = os.path.join(state_dir, "theta_state")
-    partial = theta_sketch_agg(batch, col, by=by, **agg_kw)
+    partial = theta_sketch_agg(batch, col, by=by, lg_k=lg_k)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         prev = spark.read.parquet(path)
-        merged = theta_union_agg(prev.unionByName(partial), by=by)
+        merged = theta_union_agg(prev.unionByName(partial), by=by,
+                                 lg_k=lg_k)
     else:
         merged = partial
     tmp = path + "_tmp"
@@ -188,8 +197,10 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
         part = theta_mod.sketch_longs(vals.astype(np.int64), lg_k)
         if state.exists:
             img, rows = state.get
-            merged = theta_mod.union(
-                theta_mod.ThetaSketch.from_bytes(bytes(img)), part)
+            # the stored image carries no nominal size: the union's
+            # keeps the state at O(k)
+            merged = theta_mod.union_many(
+                [theta_mod.ThetaSketch.from_bytes(bytes(img)), part], lg_k)
             rows = int(rows) + n
         else:
             merged, rows = part, n

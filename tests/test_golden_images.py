@@ -35,12 +35,18 @@ def test_images_unchanged(expected):
 
 
 def test_theta_images_readable(expected):
+    """The theta, HLL and KLL goldens hold the engine's retired private
+    images; they read as before, and rewritten as the reference image
+    they answer the same."""
     from datasketches_java_spark.sketches import theta
     a = expected["_answers"]
-    assert theta.ThetaSketch.from_bytes(_read("theta_exact.sk")).estimate() \
-        == a["theta_exact_estimate"]
-    assert theta.ThetaSketch.from_bytes(_read("theta_est.sk")).estimate() \
-        == a["theta_est_estimate"]
+    for name in ("theta_exact", "theta_est"):
+        sk = theta.ThetaSketch.from_bytes(_read(f"{name}.sk"))
+        assert [sk.lg_k, sk.count, int(sk.theta)] == a[f"{name}_state"]
+        assert sk.estimate() == a[f"{name}_estimate"]
+        assert list(sk.bounds(2)) == a[f"{name}_bounds_2sd"]
+        assert theta.ThetaSketch.from_bytes(sk.to_bytes()).estimate() \
+            == a[f"{name}_estimate"]
 
 
 def test_hll_kll_tuple_readable(expected):
@@ -48,10 +54,18 @@ def test_hll_kll_tuple_readable(expected):
     from datasketches_java_spark.sketches import tuple as tpl
     from datasketches_java_spark.sketches.kll import KllDoublesSketch
     a = expected["_answers"]
-    assert hll.HllSketch.from_bytes(_read("hll_10k.sk")).estimate() \
+    h = hll.HllSketch.from_bytes(_read("hll_10k.sk"))
+    assert h.lg_k == a["hll_lg_k"] and h.estimate() == a["hll_estimate"]
+    assert list(h.bounds(2)) == a["hll_bounds_2sd"]
+    assert hll.HllSketch.from_bytes(h.to_bytes()).estimate() \
         == a["hll_estimate"]
-    assert KllDoublesSketch.from_bytes(_read("kll_5k.sk")).quantile(0.5) \
-        == a["kll_median"]
+    k = KllDoublesSketch.from_bytes(_read("kll_5k.sk"))
+    assert [k.k, k.n, k.min_value, k.max_value] == a["kll_state"]
+    assert k.quantile(0.5) == a["kll_median"]
+    assert k.quantiles(a["kll_ranks"]) == a["kll_quantiles"]
+    assert k.rank(k.quantile(0.5)) == a["kll_rank_of_median"]
+    assert KllDoublesSketch.from_bytes(k.to_bytes()).quantiles(
+        a["kll_ranks"]) == a["kll_quantiles"]
     assert float(tpl.TupleSketch.from_bytes(
         _read("tuple_sum.sk")).sum_values()[0]) == a["tuple_sum"]
 

@@ -10,6 +10,7 @@ import pytest
 
 from datasketches_java_spark.sketches.kll import KllDoublesSketch
 from datasketches_java_spark.sketches.kll_serde import (
+    _total_capacity,
     from_java_bytes,
     to_java_bytes,
 )
@@ -41,7 +42,11 @@ def test_full_layout_and_roundtrip():
     num_levels = img[18]
     assert num_levels == len([lv for lv in sk.levels])
     starts = np.frombuffer(img, dtype="<i4", count=num_levels, offset=20)
-    assert starts[0] == 0 and np.all(np.diff(starts) >= 0)
+    # offsets into an array of the reference's total capacity, whose
+    # end the retained items fill (what datasketches-java heapifies)
+    retained = sum(lv.shape[0] for lv in sk.levels)
+    assert starts[0] == _total_capacity(200, num_levels) - retained
+    assert np.all(np.diff(starts) >= 0)
     rt = from_java_bytes(img)
     assert rt.n == sk.n and rt.k == sk.k
     assert rt.min_value == sk.min_value and rt.max_value == sk.max_value
@@ -62,6 +67,28 @@ def test_nonzero_level_base_offsets_read():
     rt = from_java_bytes(bytes(img))
     assert rt.n == sk.n
     assert rt.quantile(0.5) == sk.quantile(0.5)
+
+
+def _unflagged(img: bytes, item_fmt: str) -> bytes:
+    """``img`` as datasketches-java 6.x writes it: no doubles flag, items
+    (min, max and the retained ones) as ``item_fmt``."""
+    head = 8 if img[1] == 2 else 20 + 4 * img[18]
+    items = np.frombuffer(img, dtype="<f8", offset=head)
+    return (img[:3] + bytes([img[3] & ~8]) + img[4:head]
+            + items.astype(item_fmt).tobytes())
+
+
+@pytest.mark.parametrize("n", [1, 150, 20_000])
+@pytest.mark.parametrize("item_fmt", ["<f8", "<f4"])
+def test_unflagged_images_read_by_length(n, item_fmt):
+    """Without the doubles flag the item width comes from the image's
+    length: doubles and floats both read back."""
+    x = np.random.default_rng(n).standard_normal(n).astype(item_fmt)
+    sk = KllDoublesSketch.new(200).update_batch(x.astype(np.float64))
+    rt = from_java_bytes(_unflagged(to_java_bytes(sk), item_fmt))
+    assert rt.n == n and rt.min_value == x.min() and rt.max_value == x.max()
+    for q in (0.01, 0.5, 0.99):
+        assert rt.quantile(q) == sk.quantile(q)
 
 
 def test_merge_through_wire_matches_error_envelope():

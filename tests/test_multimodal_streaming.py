@@ -281,6 +281,20 @@ def test_incremental_theta_state(spark, tmp_path):
     assert got == want
 
 
+def test_incremental_theta_state_keeps_lg_k(spark, tmp_path):
+    """The merge of batch 2 into the state keeps the batches' nominal
+    size: 6,000 distinct values stay exact at lg_k=16."""
+    from datasketches_java_spark.functions.sketch_aggs import theta_estimate
+    from datasketches_java_spark.streaming.incremental import (
+        incremental_theta_state)
+    state = str(tmp_path / "st16")
+    for lo, hi in ((0, 3_000), (2_000, 6_000)):
+        merged = incremental_theta_state(
+            spark, spark.range(lo, hi).withColumnRenamed("id", "v"),
+            state, "v", by=[], lg_k=16)
+    assert merged.select(theta_estimate("theta_sketch")).first()[0] == 6_000.0
+
+
 def test_delta_new_docs(spark):
     from datasketches_java_spark.streaming.incremental import delta_new_docs
     pages = spark.createDataFrame([(f"u{i}", "t") for i in range(10)],
@@ -413,3 +427,33 @@ def test_media_exact_dedup_via_binary_theta(spark, media):
     assert round(est) == 20
     exact = tripled.select(F.sha2("blob", 256)).distinct().count()
     assert exact == 20
+
+
+def test_stateful_theta_distinct_state_stays_bounded(spark, tmp_path):
+    """Three micro-batches of 100 new values per key at lg_k=6: the
+    stored image never holds more than 2^6 entries (estimation mode),
+    and the estimate stays within the sketch's error."""
+    import pandas as pd
+    from datasketches_java_spark.sketches import theta
+    from datasketches_java_spark.streaming.incremental import (
+        stateful_theta_distinct)
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    for b in range(3):
+        pd.DataFrame({"k": ["a"] * 100, "v": range(b * 100, b * 100 + 100)}) \
+            .to_parquet(src / f"b{b}.parquet")
+    stream = (spark.readStream.schema("k string, v long")
+              .option("maxFilesPerTrigger", "1").parquet(str(src)))
+    ckpt = str(tmp_path / "ckpt")
+    q = (stateful_theta_distinct(stream, "k", "v", lg_k=6)
+         .writeStream.format("memory").queryName("theta_bounded")
+         .outputMode("update").option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    ests = [r[0] for r in spark.sql(
+        "SELECT distinct_estimate FROM theta_bounded").collect()]
+    assert len(ests) == 3 and abs(ests[-1] - 300) < 0.5 * 300
+    img = (spark.read.format("statestore").load(ckpt)
+           .select("value.groupState.image").first()[0])
+    stored = theta.ThetaSketch.from_bytes(bytes(img))
+    assert stored.theta < theta.MAX_THETA and stored.count <= 1 << 6

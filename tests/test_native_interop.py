@@ -1,0 +1,188 @@
+"""Interop with the datasketches-java jar Spark ships: the images of
+Spark's built-in theta/HLL/KLL aggregates read back in the engine, and
+the engine's images heapify in the JVM (reached as
+``spark._jvm.org.apache.datasketches``) with the same answers."""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from datasketches_java_spark.sketches import hll, theta, theta_serde
+from datasketches_java_spark.sketches.kll import KllDoublesSketch
+
+INTERIOR_RANKS = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
+
+
+@pytest.fixture(scope="module")
+def ds(spark):
+    return spark._jvm.org.apache.datasketches
+
+
+def _wrap(ds, img: bytes):
+    return ds.memory.Memory.wrap(bytearray(img))
+
+
+def _one(df, agg) -> bytes:
+    return bytes(df.agg(agg.alias("sk")).first()["sk"])
+
+
+# -- KLL -------------------------------------------------------------------
+
+@pytest.mark.parametrize("n", [1, 150, 20_000])
+def test_kll_reader_on_builtin_double_and_float_images(spark, ds, n):
+    """datasketches-java 6.x sets no doubles flag on either image: the
+    reader tells the item type from the image's length."""
+    x = np.random.default_rng(n).standard_normal(n)
+    df = spark.createDataFrame([(float(v),) for v in x], "d double")
+    img_d = _one(df, F.kll_sketch_agg_double("d", 200))
+    img_f = _one(df.select(F.col("d").cast("float").alias("f")),
+                 F.kll_sketch_agg_float("f", 200))
+    jd = ds.kll.KllDoublesSketch.heapify(_wrap(ds, img_d))
+    jf = ds.kll.KllFloatsSketch.heapify(_wrap(ds, img_f))
+    got_d = KllDoublesSketch.from_bytes(img_d)
+    got_f = KllDoublesSketch.from_bytes(img_f)
+    for got, j in ((got_d, jd), (got_f, jf)):
+        assert got.n == j.getN() == n
+        assert np.float32(got.min_value) == np.float32(j.getMinItem())
+        assert np.float32(got.max_value) == np.float32(j.getMaxItem())
+    assert got_d.min_value == x.min() and got_d.max_value == x.max()
+    for r in INTERIOR_RANKS:
+        assert got_d.quantile(r) == jd.getQuantile(r)
+        assert np.float32(got_f.quantile(r)) == np.float32(jf.getQuantile(r))
+
+
+@pytest.mark.parametrize("n", [1, 100, 5_000, 100_000])
+def test_engine_kll_image_heapifies_in_jvm(ds, n):
+    x = np.random.default_rng(7).standard_normal(n)
+    sk = KllDoublesSketch.new(200).update_batch(x)
+    j = ds.kll.KllDoublesSketch.heapify(_wrap(ds, sk.to_bytes()))
+    assert j.getN() == n and j.getK() == 200
+    assert j.getMinItem() == sk.min_value and j.getMaxItem() == sk.max_value
+    for r in INTERIOR_RANKS:
+        assert j.getQuantile(r) == sk.quantile(r)
+    for v in x[:20]:
+        assert j.getRank(float(v)) == sk.rank(float(v))
+
+
+# -- HLL -------------------------------------------------------------------
+
+@pytest.mark.parametrize("n", [10, 1_000, 100_000])
+def test_engine_hll_image_heapifies_in_jvm(ds, n):
+    """The registers survive the JVM round trip bit-exactly.  The JVM's
+    estimator is not the engine's composite one, so their estimates
+    agree to within the JVM's own one-sigma bounds."""
+    sk = hll.sketch_longs(np.arange(n), 12)
+    j = ds.hll.HllSketch.heapify(_wrap(ds, sk.to_bytes()))
+    assert j.getLgConfigK() == 12
+    back = hll.HllSketch.from_bytes(bytes(j.toCompactByteArray()))
+    assert np.array_equal(back.regs, sk.regs)
+    assert j.getLowerBound(1) <= sk.estimate() <= j.getUpperBound(1)
+
+
+@pytest.mark.parametrize("dtype", ["int", "bigint", "string"])
+def test_builtin_hll_registers_equal_engine(spark, dtype):
+    import pandas as pd
+
+    from datasketches_java_spark.functions.sketch_aggs import _utf8_flat
+    from datasketches_java_spark.sketches.murmur3 import hash128_bytes_batch
+    n = 50_000
+    img = _one(spark.range(n).select(F.col("id").cast(dtype)),
+               F.hll_sketch_agg("id", 12))
+    if dtype == "string":
+        h1, h2 = hash128_bytes_batch(
+            *_utf8_flat(pd.Series([str(i) for i in range(n)])), 9001)
+        want = hll.from_hash_pair(h1, h2, 12)
+    else:
+        want = hll.sketch_longs(np.arange(n), 12)
+    assert np.array_equal(hll.HllSketch.from_bytes(img).regs, want.regs)
+
+
+# -- theta -----------------------------------------------------------------
+
+@pytest.mark.parametrize("n", [0, 1, 100, 1_000, 10_000, 100_000])
+def test_builtin_theta_images_decode_to_jvm_entries(spark, ds, n):
+    """Spark writes serVer 4 (compressed) from two entries up; the
+    engine decodes it to the entries and theta the JVM holds."""
+    img = _one(spark.range(n), F.theta_sketch_agg("id", 12))
+    if n >= 2:
+        assert img[1] == 4
+    j = ds.theta.CompactSketch.heapify(_wrap(ds, img))
+    got = theta.ThetaSketch.from_bytes(img)
+    assert got.count == j.getRetainedEntries(True)
+    assert int(got.theta) == j.getThetaLong()
+    assert got.estimate() == j.getEstimate()
+    uncompressed = theta_serde.from_java_bytes(bytes(j.toByteArray()))
+    assert np.array_equal(got.hashes, uncompressed.hashes)
+
+
+def test_engine_exact_theta_image_is_byte_equal_to_jvm(spark, ds):
+    img = _one(spark.range(1_000), F.theta_sketch_agg("id", 12))
+    j = ds.theta.CompactSketch.heapify(_wrap(ds, img))
+    assert theta.sketch_longs(np.arange(1_000), 12).to_bytes() == \
+        bytes(j.toByteArray())
+
+
+@pytest.mark.parametrize("dtype", ["tinyint", "int", "bigint", "double"])
+def test_builtin_theta_hashes_numbers_like_engine(spark, dtype):
+    """Integral columns hash as update(long), DOUBLE as update(double)
+    (canonical bits: -0.0 == 0.0, one NaN)."""
+    from datasketches_java_spark.functions import sketch_aggs as A
+    if dtype == "double":
+        vals = np.array([1.5, 1.7, -0.0, 0.0, 2.25, float("nan"), 1e300])
+        want = theta.sketch_doubles(vals, 12)
+    else:
+        vals = np.arange(-60, 60)
+        want = theta.sketch_longs(vals, 12)
+    df = spark.createDataFrame([(v.item(),) for v in vals], f"v {dtype}")
+    img = A.theta_sketch_agg(df, "v").first()[0]
+    assert np.array_equal(theta.ThetaSketch.from_bytes(img).hashes, want.hashes)
+
+
+def test_exact_sketches_stay_exact_through_pair_set_ops(spark):
+    """Compact images carry no nominal k; the reader infers one from
+    the count that keeps a pairwise union of exact sketches exact."""
+    from datasketches_java_spark.functions import sketch_aggs as A
+    a = A.theta_sketch_agg(spark.range(0, 15_000), "id", lg_k=16)
+    b = A.theta_sketch_agg(spark.range(5_000, 20_000), "id", lg_k=16)
+    row = (a.withColumnRenamed("theta_sketch", "a")
+           .crossJoin(b.withColumnRenamed("theta_sketch", "b"))
+           .select(A.theta_estimate(A.theta_union_pair("a", "b")).alias("u"),
+                   A.theta_estimate(A.theta_intersect_pair("a", "b")).alias("i"),
+                   A.theta_estimate(A.theta_a_not_b_pair("a", "b")).alias("d"))
+           .first())
+    assert (row.u, row.i, row.d) == (20_000.0, 10_000.0, 5_000.0)
+
+
+def test_engine_images_feed_the_builtin_union(spark):
+    from datasketches_java_spark.functions import sketch_aggs as A
+    parts = [theta.sketch_longs(np.arange(i * 300, i * 300 + 500), 12)
+             for i in range(4)]
+    df = spark.createDataFrame([(bytearray(p.to_bytes()),) for p in parts],
+                               "theta_sketch binary")
+    est = (A.theta_union_agg(df)
+           .select(A.theta_estimate("theta_sketch")).first()[0])
+    assert est == theta.union_many(parts).estimate() == 1_400.0
+
+
+def test_legacy_image_in_builtin_union_raises(spark):
+    """The built-in union rejects the engine's retired private image
+    (``tests/golden/theta_exact.sk``) with an error, never a number;
+    ``theta_to_java`` is the one-time upgrade."""
+    import os
+
+    from pyspark.errors import PySparkException
+
+    from datasketches_java_spark.functions import sketch_aggs as A
+    with open(os.path.join(os.path.dirname(__file__), "golden",
+                           "theta_exact.sk"), "rb") as f:
+        img = f.read()
+    df = spark.createDataFrame([(bytearray(img),)], "theta_sketch binary")
+    with pytest.raises(PySparkException,
+                       match="THETA_INVALID_INPUT_SKETCH_BUFFER"):
+        A.theta_union_agg(df).collect()
+    upgraded = df.select(A.theta_to_java("theta_sketch").alias("theta_sketch"))
+    est = A.theta_union_agg(upgraded).select(
+        A.theta_estimate("theta_sketch")).first()[0]
+    assert est == 1000.0

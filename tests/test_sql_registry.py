@@ -141,3 +141,70 @@ def test_theta_build_on_binary_column(sql, spark):
         SELECT CAST(theta_sketch_estimate(theta_sketch_build(blob))
                     AS BIGINT) d FROM blobs""").collect()[0]["d"]
     assert est == 5   # 5 distinct non-empty payloads, b'' rejected
+
+
+def test_double_column_hashes_like_dataframe(sql, spark):
+    """DOUBLE values hash as update(double): 1.5 and 1.7 are distinct,
+    and the SQL sketches equal the DataFrame (built-in) sketch."""
+    from datasketches_java_spark.functions import sketch_aggs as A
+    from datasketches_java_spark.sketches import hll, theta
+    vals = [1.5, 1.7, 2.0, -0.0, 0.0, 1e300, None]
+    df = spark.createDataFrame([(v,) for v in vals], "d double")
+    df.createOrReplaceTempView("doubles")
+    row = sql("""SELECT theta_sketch_build(d) t, hll_sketch_build(d) h,
+                        cpc_sketch_estimate(cpc_sketch_build(d)) c
+                 FROM doubles""").first()
+    t = theta.ThetaSketch.from_bytes(row["t"])
+    frame = theta.ThetaSketch.from_bytes(A.theta_sketch_agg(df, "d").first()[0])
+    assert t.estimate() == frame.estimate() == 5.0
+    assert t.to_bytes() == frame.to_bytes()
+    assert round(hll.HllSketch.from_bytes(row["h"]).estimate()) == 5
+    assert round(row["c"]) == 5
+
+
+def test_integer_column_with_nulls_hashes_as_long(sql, spark):
+    from datasketches_java_spark.functions import sketch_aggs as A
+    from datasketches_java_spark.sketches.theta import ThetaSketch
+    df = spark.createDataFrame([(1,), (2,), (None,), (3,)], "v bigint")
+    df.createOrReplaceTempView("ints_with_nulls")
+    img = sql("SELECT theta_sketch_build(v) FROM ints_with_nulls").first()[0]
+    frame = A.theta_sketch_agg(df, "v").first()[0]
+    assert ThetaSketch.from_bytes(img).to_bytes() == \
+        ThetaSketch.from_bytes(frame).to_bytes()
+
+
+def test_hll_agg_rejects_floating_columns_from_the_schema(spark):
+    from datasketches_java_spark.functions import sketch_aggs as A
+    df = spark.createDataFrame([(1.5, 1.5)], "d double, f float")
+    for col in ("d", "f"):
+        with pytest.raises(TypeError, match="hll_sketch_agg"):
+            A.hll_sketch_agg(df, col)
+
+
+def test_kll_and_freq_scalars_return_null_on_null_image(sql, spark):
+    spark.createDataFrame([(None,)], "sk binary") \
+        .createOrReplaceTempView("null_images")
+    row = sql("""SELECT kll_sketch_quantile(sk, 0.5) q,
+                        kll_sketch_rank(sk, 1.0) r,
+                        frequent_strings_sketch_result(sk, 0) f
+                 FROM null_images""").first()
+    assert (row["q"], row["r"], row["f"]) == (None, None, None)
+
+
+def test_hll_build_ignores_registry_seed(sql, spark):
+    """HLL images store no seed hash, so a registry with its own seed
+    still builds HLL with the default one: its images equal the
+    built-in's and merge with them."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from datasketches_java_spark.sketches import hll
+    spark.range(5_000).createOrReplaceTempView("hll_ids")
+    builtin = spark.range(5_000).agg(F.hll_sketch_agg("id", 12)).first()[0]
+    try:
+        register_sql_functions(spark, seed=7)
+        img = sql("SELECT hll_sketch_build(id) FROM hll_ids").first()[0]
+    finally:
+        register_sql_functions(spark)
+    assert np.array_equal(hll.HllSketch.from_bytes(img).regs,
+                          hll.HllSketch.from_bytes(builtin).regs)
