@@ -106,30 +106,32 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q_theta_customers_by_nation(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     cust = _read(spark, sf, "customer")
     sk = theta_sketch_agg(cust, "c_custkey", by=["c_nationkey"], lg_k=12)
     return (sk.select("c_nationkey",
-                      F.round(theta_estimate("theta_sketch")).cast("long")
+                      F.theta_sketch_estimate("theta_sketch")
                       .alias("distinct_customers"))
             .orderBy("c_nationkey"))
 
 
 def _q_theta_orderkeys_global(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     orders = _read(spark, sf, "orders")
     sk = theta_sketch_agg(orders, "o_orderkey",
                           lg_k=_exact_lg_k(1_500_000 * _sf(sf)))
-    return sk.select(F.round(theta_estimate("theta_sketch")).cast("long")
+    return sk.select(F.theta_sketch_estimate("theta_sketch")
                      .alias("distinct_orderkeys"))
+
+
+def _customer_lg_k(sf: str) -> int:
+    return _exact_lg_k(150_000 * _sf(sf))   # distinct custkeys <= |customer|
 
 
 def _customer_halves(spark: SparkSession, sf: str):
     from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     orders = _read(spark, sf, "orders")
-    lgk = _exact_lg_k(150_000 * _sf(sf))   # distinct custkeys <= |customer|
+    lgk = _customer_lg_k(sf)
     a = theta_sketch_agg(
         orders.filter(F.col("o_orderdate") < F.lit("1998-01-01")),
         "o_custkey", lg_k=lgk).withColumnRenamed("theta_sketch", "sk_a")
@@ -144,53 +146,45 @@ def _q_theta_distinct_names(spark: SparkSession, sf: str) -> DataFrame:
     bytes with the reference-parity batch murmur3
     (theta/UpdateSketch.java:255), not a pre-hash shortcut, so the
     image is hash-equal to a reference sketch of the same strings."""
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     cust = _read(spark, sf, "customer")
     sk = theta_sketch_agg(cust, "c_name",
                           lg_k=_exact_lg_k(150_000 * _sf(sf)))
-    return sk.select(F.round(theta_estimate("theta_sketch")).cast("long")
+    return sk.select(F.theta_sketch_estimate("theta_sketch")
                      .alias("distinct_names"))
 
 
 def _q_theta_serde_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    """Distinct orderkeys with the sketch column exported to the
-    reference's serVer-3 compact-ordered wire format and heapified
-    back before estimating (theta/PreambleUtil.java:28-133 layout,
-    theta/Sketch.java:70 heapify) — the interop path a
-    datasketches-java/Hive/Pig producer or consumer would hit,
+    """Distinct orderkeys with the JVM's sketch image read by the
+    engine, written back as the reference's serVer-3 compact-ordered
+    image (theta/PreambleUtil.java:28-133 layout) and heapified by the
+    JVM again before estimating (theta/Sketch.java:70) — the interop
+    path a datasketches-java/Hive/Pig producer or consumer would hit,
     exercised inside the oracle gate."""
     from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_from_java, theta_sketch_agg, theta_to_java)
+        theta_sketch_agg, theta_to_java)
     orders = _read(spark, sf, "orders")
     sk = theta_sketch_agg(orders, "o_orderkey",
                           lg_k=_exact_lg_k(1_500_000 * _sf(sf)))
-    wire = sk.select(theta_from_java(theta_to_java("theta_sketch"))
-                     .alias("theta_sketch"))
-    return wire.select(F.round(theta_estimate("theta_sketch")).cast("long")
-                       .alias("distinct_orderkeys"))
+    return sk.select(F.theta_sketch_estimate(theta_to_java("theta_sketch"))
+                     .alias("distinct_orderkeys"))
 
 
 def _q_theta_setops(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_a_not_b_pair, theta_estimate, theta_intersect_pair,
-        theta_union_pair)
     both = _customer_halves(spark, sf)
     return both.select(
-        F.round(theta_estimate(theta_union_pair("sk_a", "sk_b")))
-        .cast("long").alias("union_custkeys"),
-        F.round(theta_estimate(theta_intersect_pair("sk_a", "sk_b")))
-        .cast("long").alias("intersect_custkeys"),
-        F.round(theta_estimate(theta_a_not_b_pair("sk_a", "sk_b")))
-        .cast("long").alias("a_not_b_custkeys"))
+        F.theta_sketch_estimate(F.theta_union("sk_a", "sk_b", _customer_lg_k(sf)))
+        .alias("union_custkeys"),
+        F.theta_sketch_estimate(F.theta_intersection("sk_a", "sk_b"))
+        .alias("intersect_custkeys"),
+        F.theta_sketch_estimate(F.theta_difference("sk_a", "sk_b"))
+        .alias("a_not_b_custkeys"))
 
 
 def _q_theta_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_intersect_pair, theta_union_pair)
     both = _customer_halves(spark, sf)
-    inter = F.round(theta_estimate(theta_intersect_pair("sk_a", "sk_b"))).cast("long")
-    uni = F.round(theta_estimate(theta_union_pair("sk_a", "sk_b"))).cast("long")
+    inter = F.theta_sketch_estimate(F.theta_intersection("sk_a", "sk_b"))
+    uni = F.theta_sketch_estimate(F.theta_union("sk_a", "sk_b", _customer_lg_k(sf)))
     return (both.select((inter * F.lit(1000000)).alias("i6"), uni.alias("u"))
             .select(F.expr("div(i6, u)").alias("jaccard_micros")))
 
@@ -200,12 +194,11 @@ def _q_hll_nations_by_region(spark: SparkSession, sf: str) -> DataFrame:
     the linear-counting range estimator is exact after rounding, so
     the oracle hash-matches; large-cardinality relative-error bounds
     are asserted in tests/test_hll.py."""
-    from datasketches_java_spark.functions.sketch_aggs import (
-        hll_estimate, hll_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import hll_sketch_agg
     nation = _read(spark, sf, "nation")
     sk = hll_sketch_agg(nation, "n_nationkey", by=["n_regionkey"])
     return (sk.select("n_regionkey",
-                      F.round(hll_estimate("hll_sketch")).cast("long")
+                      F.hll_sketch_estimate("hll_sketch")
                       .alias("distinct_nations"))
             .orderBy("n_regionkey"))
 
@@ -251,16 +244,12 @@ def _q_long_dup_substrings(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_kll_acctbal_by_nation(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        kll_quantiles, kll_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import kll_sketch_agg
     cust = _read(spark, sf, "customer")
     sk = kll_sketch_agg(cust, "c_acctbal", by=["c_nationkey"], k=4096)
-    q = kll_quantiles([0.25, 0.5, 0.75])
-    return (sk.select("c_nationkey", q("kll_sketch").alias("qs"))
-            .select("c_nationkey",
-                    F.col("qs")[0].alias("q25"),
-                    F.col("qs")[1].alias("q50"),
-                    F.col("qs")[2].alias("q75"))
+    return (sk.select("c_nationkey", *(
+                F.kll_sketch_get_quantile_double("kll_sketch", F.lit(r / 100))
+                .alias(f"q{r}") for r in (25, 50, 75)))
             .orderBy("c_nationkey"))
 
 
@@ -378,13 +367,14 @@ def _q_kll_items_serde_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_kll_price_stats(spark: SparkSession, sf: str) -> DataFrame:
-    from datasketches_java_spark.functions.sketch_aggs import (
-        kll_max, kll_min, kll_n, kll_sketch_agg)
+    """n, and the exact min and max: the quantiles at ranks 0 and 1."""
+    from datasketches_java_spark.functions.sketch_aggs import kll_sketch_agg
     li = _read(spark, sf, "lineitem")
     sk = kll_sketch_agg(li, "l_extendedprice", k=200)
-    return sk.select(kll_n("kll_sketch").alias("n"),
-                     kll_min("kll_sketch").alias("min_price"),
-                     kll_max("kll_sketch").alias("max_price"))
+    return sk.select(
+        F.kll_sketch_get_n_double("kll_sketch").alias("n"),
+        F.kll_sketch_get_quantile_double("kll_sketch", F.lit(0.0)).alias("min_price"),
+        F.kll_sketch_get_quantile_double("kll_sketch", F.lit(1.0)).alias("max_price"))
 
 
 def _q_freq_orderpriority(spark: SparkSession, sf: str) -> DataFrame:
@@ -481,14 +471,14 @@ def _q_theta_incremental_events(spark: SparkSession, sf: str) -> DataFrame:
     """Batch-incremental path: per-half partial sketches unioned via the
     sketch-column merge (the checkpoint resume shape, SURVEY.md §2.11)."""
     from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg, theta_union_agg)
+        theta_sketch_agg, theta_union_agg)
     ev = _read(spark, sf, "events")
     half = F.when(F.dayofmonth("ts") <= 15, F.lit(0)).otherwise(F.lit(1))
     partials = theta_sketch_agg(ev.withColumn("half", half), "user_id",
                                 by=["event_type", "half"], lg_k=12)
     merged = theta_union_agg(partials.drop("half"), by=["event_type"])
     return (merged.select("event_type",
-                          F.round(theta_estimate("theta_sketch")).cast("long")
+                          F.theta_sketch_estimate("theta_sketch")
                           .alias("distinct_users"))
             .orderBy("event_type"))
 
@@ -928,8 +918,8 @@ def _q_sql_theta_distinct_by_nation(spark: SparkSession,
                                     sf: str) -> DataFrame:
     """The pure-SQL entry point (functions/sql_registry.py): the same
     theta distinct-count as the flagship DataFrame query, but issued
-    as `spark.sql()` TEXT through the registered
-    theta_sketch_build/theta_sketch_estimate functions — the Spark
+    as `spark.sql()` TEXT through the registered theta_sketch_build
+    and Spark's own theta_sketch_estimate (BIGINT) — the Spark
     counterpart of the reference's Hive adaptor surface
     (reference README.md:31).  Exact-mode lgK makes the estimate equal
     COUNT(DISTINCT) at test scales, so the query is oracle-gated."""
@@ -941,8 +931,8 @@ def _q_sql_theta_distinct_by_nation(spark: SparkSession,
     _read(spark, sf, "customer").createOrReplaceTempView("customer_sqlreg")
     return spark.sql("""
         SELECT c_nationkey,
-               CAST(theta_sketch_estimate(theta_sketch_build(c_custkey))
-                    AS BIGINT) AS distinct_customers
+               theta_sketch_estimate(theta_sketch_build(c_custkey))
+                   AS distinct_customers
         FROM customer_sqlreg
         GROUP BY c_nationkey ORDER BY c_nationkey""")
 

@@ -8,10 +8,13 @@ local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
   {"metric": "docs/sec (signature+LSH+cluster end-to-end)",
    "value": <docs/sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
+$SPARK_GRAFT_CPUS and $SPARK_GRAFT_DRIVER_MEM default to
+functions/session.machine() (nproc, a quarter of MemAvailable).
+
 `--scaling` mode: reruns the identical pipeline job at two parallelism
-levels (local[8] vs local[32]) on the same input — the sandbox
-evidence for the north rule's N→4N executor scaling-efficiency ≥ 0.8
-criterion (no real cluster here; see BENCH.md).
+levels ($SPARK_GRAFT_SCALE_LO, default 4, and 4x that) on the same
+input — N→4N scaling efficiency (see BENCH.md).  Per-stage and
+per-kernel numbers come from perfbench (perfbench/README.md).
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 FIXTURE_DIR = os.path.join(REPO, ".cache", f"webtext_bench_{BENCH_DOCS}")
 
@@ -106,62 +109,20 @@ def run_queries(spark) -> dict[str, float]:
     return out
 
 
-def _spark(cores: int):
-    from datasketches_java_spark.functions.session import get_spark
+def _spark(cores: int | None):
+    from datasketches_java_spark.functions.session import get_spark, machine
+    cores = cores or machine()[0]
     return get_spark("bench", cores=cores,
                      shuffle_partitions=max(cores * 2, 16),
-                     driver_memory=os.environ.get(
-                         "SPARK_GRAFT_DRIVER_MEM", "48g"))
+                     driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
 
 
 def main() -> None:
-    if "--scaling-cluster" in sys.argv:
-        # N -> 4N EXECUTOR scaling on Spark's local-cluster mode:
-        # separate executor JVMs + real shuffle transport — the closest
-        # in-sandbox analogue to the north rule's multi-executor
-        # criterion (local[N] thread mode shares one JVM heap and no
-        # network path).  1 executor x 4 cores vs 4 executors x 4
-        # cores on the 32-core box (the 4-exec level uses 16 of 32
-        # cores so executor JVM + Python worker pairs don't
-        # oversubscribe; see BENCH.md).
-        from datasketches_java_spark.functions.session import get_spark
-        os.environ.setdefault("SPARK_GRAFT_PIPE_REPS", "1")  # outer reps
-        lo = int(os.environ.get("SPARK_GRAFT_CLUSTER_LO", "1"))
-        hi = int(os.environ.get("SPARK_GRAFT_CLUSTER_HI", str(lo * 4)))
-        cores_per = int(os.environ.get("SPARK_GRAFT_CLUSTER_CORES", "4"))
-        mem = os.environ.get("SPARK_GRAFT_CLUSTER_MEM", "8192")
-        reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-        rows = []
-        for n_exec in (lo, hi):
-            best = None
-            for _ in range(reps):
-                spark = get_spark(
-                    "bench-cluster",
-                    master=f"local-cluster[{n_exec},{cores_per},{mem}]",
-                    shuffle_partitions=max(n_exec * cores_per * 2, 16),
-                    executor_memory=f"{mem}m")
-                wall, n_docs, _ = run_pipeline(spark)
-                spark.stop()
-                if best is None or wall < best:
-                    best = wall
-            rows.append({"executors": n_exec, "cores_per_executor": cores_per,
-                         "wall_s": round(best, 2),
-                         "docs_per_sec": round(n_docs / best, 1)})
-        eff = rows[1]["docs_per_sec"] / rows[0]["docs_per_sec"] / (hi / lo)
-        print(json.dumps({
-            "metric": (f"executor scaling efficiency local-cluster "
-                       f"{lo}x{cores_per} -> {hi}x{cores_per}"),
-            "value": round(eff, 3), "unit": "ratio",
-            "runs": rows, "n_docs": BENCH_DOCS}))
-        return
-
     if "--scaling" in sys.argv:
-        # N → 4N evidence (north rule).  4 vs 16 cores on the 32-core
-        # sandbox: each Spark task slot pairs a JVM thread with a
-        # Python worker process, so local[32] would oversubscribe the
-        # box and measure the machine, not the job.  Best-of-2 per
-        # level because the sandbox shows multi-percent CPU steal
-        # bursts (see BENCH.md).
+        # N → 4N evidence.  Each Spark task slot pairs a JVM thread
+        # with a Python worker process, so keep the high level within
+        # nproc or it measures the machine, not the job.  Best-of-2
+        # per level because VMs show CPU-steal bursts (see BENCH.md).
         os.environ.setdefault("SPARK_GRAFT_PIPE_REPS", "1")  # outer reps
         lo = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "4"))
         hi = int(os.environ.get("SPARK_GRAFT_SCALE_HI", str(lo * 4)))

@@ -1,8 +1,8 @@
 """SparkSession factory with the engine's scale-aware defaults.
 
-Local mode is for correctness tests and the two-parallelism-level
-scaling bench; the same config block is what we'd ship in
-spark-submit --py-files on a real cluster (AQE, skew join, Arrow).
+Local mode is for correctness tests, scripts and the benches; the
+same config block is what we'd ship in spark-submit --py-files on a
+real cluster (AQE, skew join, Arrow).
 """
 
 from __future__ import annotations
@@ -12,18 +12,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def machine() -> tuple[int, str]:
+    """Spark sizing from this machine: one task slot per core of the
+    CPU affinity mask (nproc), and a quarter of MemAvailable (at least
+    1 GiB) as driver heap."""
+    cores = len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        mem = {k: int(v.split()[0]) for k, v in
+               (line.split(":", 1) for line in f)}
+    avail_mb = mem.get("MemAvailable", mem["MemTotal"]) // 1024
+    return cores, f"{max(1024, avail_mb // 4)}m"
+
+
 def get_spark(app_name: str = "datasketches_java_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
-              driver_memory: str = "48g",
+              driver_memory: str | None = None,
               master: str | None = None,
               executor_memory: str | None = None) -> SparkSession:
-    """`master` overrides the default local[cores] — used by the
-    scaling bench's local-cluster[N, cores, mem] mode (separate
-    executor JVMs + real shuffle transport, the closest in-sandbox
-    analogue to multi-executor scaling).  local-cluster needs
-    SPARK_HOME pointing at the pyspark distribution."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """`cores` and `driver_memory` default to ``machine()``.  `master`
+    overrides the default local[cores] — e.g. local-cluster[N, cores,
+    mem] (separate executor JVMs + real shuffle transport), which
+    needs SPARK_HOME pointing at the pyspark distribution."""
+    default_cores, default_memory = machine()
+    cores = cores or default_cores
+    driver_memory = driver_memory or default_memory
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     executor_pythonpath = None
     if master is None:
@@ -62,14 +75,3 @@ def get_spark(app_name: str = "datasketches_java_spark",
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read a driver-provided table; Iceberg first (the production
-    format per BASELINE.json input_hint), parquet fallback in sandbox."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if not path.endswith(".parquet"):
-            return spark.read.format("iceberg").load(path)
-    except Exception:
-        pass
-    return spark.read.parquet(path)

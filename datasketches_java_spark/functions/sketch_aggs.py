@@ -14,7 +14,14 @@ Two implementations of that shape:
   ``kll_sketch_agg_double``; datasketches-java in the JVM, map-side
   partial aggregation, no Python worker).  Their images are the
   reference's compact images, which the engine's ``sketches.theta``,
-  ``hll`` and ``kll`` read and write; the scalar UDFs below read them.
+  ``hll`` and ``kll`` read and write.  Spark's built-in scalars read
+  them too, so estimates, set operations and quantiles are plain
+  column expressions: ``F.theta_sketch_estimate``, ``F.theta_union``
+  (pass the lgK), ``F.theta_intersection``, ``F.theta_difference``,
+  ``F.hll_sketch_estimate``, ``F.kll_sketch_get_quantile_double``
+  (rank 0 and 1 give the exact min and max), ``F.kll_sketch_get_rank_double``
+  and ``F.kll_sketch_get_n_double``.  The UDFs below cover only what
+  Spark lacks: bounds, Jaccard and the image normalisers.
 - frequent items, REQ, CPC, tuple and sampling, which Spark lacks, use
   ``_two_phase``: mapInPandas (partial) + groupBy().applyInPandas
   (final), Arrow-batched, no per-row Python.
@@ -147,33 +154,20 @@ def theta_union_agg(df: DataFrame, sketch_col: str = "theta_sketch",
         F.theta_union_agg(sketch_col, lg_k).alias(sketch_col))
 
 
-def _image_udf(name: str, read: Callable[[bytes], object], doc: str) -> Callable:
-    """Scalar UDF ``name``: any readable image of a family -> the
-    reference image the engine writes (``read(b).to_bytes()``)."""
-    def normalise(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: read(b).to_bytes())
-    normalise.__name__ = normalise.__qualname__ = name
-    normalise.__doc__ = doc
-    return F.pandas_udf(T.BinaryType())(normalise)
+@F.pandas_udf(T.BinaryType())
+def theta_to_java(images: pd.Series) -> pd.Series:
+    """Any readable theta image (reference serVer 1-4, or the engine's
+    legacy private image) -> the reference serVer-3 compact-ordered
+    image.  Run it once over an old ``theta_state`` table to upgrade
+    it for the built-in scalars and union."""
+    return images.map(lambda b: theta.ThetaSketch.from_bytes(b).to_bytes())
 
 
-theta_to_java = _image_udf(
-    "theta_to_java", theta.ThetaSketch.from_bytes,
-    "Any readable theta image (reference serVer 1-4, or the engine's "
-    "legacy private image) -> the reference serVer-3 compact-ordered "
-    "image.  Run it once over an old ``theta_state`` table to upgrade "
-    "it for the built-in union.")
-theta_from_java = _image_udf(
-    "theta_from_java", theta.ThetaSketch.from_bytes,
-    "Same normaliser as theta_to_java: every image the engine reads "
-    "comes out as the reference serVer-3 image.")
-
-
-@F.pandas_udf(T.DoubleType())
-def theta_estimate(images: pd.Series) -> pd.Series:
-    """Distinct-count estimate from a theta image column
-    (theta/Sketch.java:264 count/theta estimator)."""
-    return images.map(lambda b: theta.ThetaSketch.from_bytes(b).estimate())
+# Older names of three built-ins, kept for existing callers.  The
+# built-in estimate is BIGINT: the estimate rounded.
+theta_estimate = F.theta_sketch_estimate
+theta_intersect_pair = F.theta_intersection
+theta_a_not_b_pair = F.theta_difference
 
 
 @F.pandas_udf(T.DoubleType())
@@ -187,30 +181,6 @@ def theta_lower_bound(images: pd.Series) -> pd.Series:
 def theta_upper_bound(images: pd.Series) -> pd.Series:
     """2-sigma upper confidence bound of a theta image column."""
     return images.map(lambda b: theta.ThetaSketch.from_bytes(b).bounds(2)[1])
-
-
-def _theta_pair_udf(op) -> Callable:
-    @F.pandas_udf(T.BinaryType())
-    def pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([
-            op(theta.ThetaSketch.from_bytes(x), theta.ThetaSketch.from_bytes(y)).to_bytes()
-            for x, y in zip(a, b)])
-    return pair
-
-
-theta_union_pair = _theta_pair_udf(theta.union)
-theta_intersect_pair = _theta_pair_udf(theta.intersect)
-theta_a_not_b_pair = _theta_pair_udf(theta.a_not_b)
-theta_union_pair.__doc__ = (
-    "Pairwise union of two theta image columns (theta-rule, "
-    "theta/UnionImpl.java:300; nominal size the larger input's) -> "
-    "new image column.")
-theta_intersect_pair.__doc__ = (
-    "Pairwise intersection of two theta image columns "
-    "(theta/IntersectionImpl counterpart) -> new image column.")
-theta_a_not_b_pair.__doc__ = (
-    "Pairwise A-and-not-B of two theta image columns "
-    "(theta/AnotBimpl counterpart) -> new image column.")
 
 
 @F.pandas_udf(T.DoubleType())
@@ -236,13 +206,6 @@ def hll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
         F.hll_sketch_agg(c, lg_k).alias("hll_sketch"))
 
 
-@F.pandas_udf(T.DoubleType())
-def hll_estimate(images: pd.Series) -> pd.Series:
-    """Cardinality estimate from an HLL image column (composite
-    estimator, hll/HllSketch.getEstimate counterpart)."""
-    return images.map(lambda b: hll.HllSketch.from_bytes(b).estimate())
-
-
 def hll_to_java(tgt_type: str = "hll8") -> Callable:
     """Any readable HLL image -> the reference HLL image at the chosen
     target type ('hll4' | 'hll6' | 'hll8'; hll/ToByteArrayImpl
@@ -258,12 +221,6 @@ def hll_to_java(tgt_type: str = "hll8") -> Callable:
                   "hll8": hll_serde.to_java_bytes}[tgt_type]
         return images.map(lambda b: writer(hll.HllSketch.from_bytes(b)))
     return enc
-
-
-hll_from_java = _image_udf(
-    "hll_from_java", hll.HllSketch.from_bytes,
-    "Any readable HLL image (HLL_4/6/8, LIST/SET modes, or the engine's "
-    "legacy private image) -> the reference HLL_8 image.")
 
 
 def kll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
@@ -304,14 +261,13 @@ def kll_items_sketch_agg(df: DataFrame, col: str,
     return _two_phase(df, by, [col], build, merge, "kll_items_sketch")
 
 
-kll_to_java = _image_udf(
-    "kll_to_java", KllDoublesSketch.from_bytes,
-    "Any readable KLL doubles image (reference compact, or the engine's "
-    "legacy private image) -> the reference compact doubles image.")
-kll_from_java = _image_udf(
-    "kll_from_java", KllDoublesSketch.from_bytes,
-    "Same normaliser as kll_to_java.  Classic-quantiles images are read "
-    "by kll_serde.classic_doubles_from_java_bytes, not here.")
+@F.pandas_udf(T.BinaryType())
+def kll_to_java(images: pd.Series) -> pd.Series:
+    """Any readable KLL doubles image (reference compact, or the
+    engine's legacy private image) -> the reference compact doubles
+    image, the one the built-in KLL scalars read.  Classic-quantiles
+    images are read by kll_serde.classic_doubles_from_java_bytes."""
+    return images.map(lambda b: KllDoublesSketch.from_bytes(b).to_bytes())
 
 
 def kll_items_to_java(dtype: str = "long") -> Callable:
@@ -374,53 +330,6 @@ def kll_items_rank(value, inclusive: bool = True) -> Callable:
         return images.map(
             lambda b: KllItemsSketch.from_bytes(b).rank(value, inclusive))
     return r
-
-
-def kll_quantile(rank: float, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: quantile at ``rank`` from a KLL image
-    column (kll/KllDoublesSketch.getQuantile counterpart)."""
-    @F.pandas_udf(T.DoubleType())
-    def q(images: pd.Series) -> pd.Series:
-        return images.map(
-            lambda b: KllDoublesSketch.from_bytes(b).quantile(rank, inclusive))
-    return q
-
-
-def kll_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: array of quantiles at ``ranks`` from a
-    KLL image column (one deserialize per row, not per rank)."""
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def qs(images: pd.Series) -> pd.Series:
-        return images.map(
-            lambda b: KllDoublesSketch.from_bytes(b).quantiles(ranks, inclusive))
-    return qs
-
-
-def kll_rank(value: float) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a KLL
-    image column (kll/KllDoublesSketch.getRank counterpart)."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: KllDoublesSketch.from_bytes(b).rank(value))
-    return r
-
-
-@F.pandas_udf(T.LongType())
-def kll_n(images: pd.Series) -> pd.Series:
-    """Total update count n recorded in a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).n)
-
-
-@F.pandas_udf(T.DoubleType())
-def kll_min(images: pd.Series) -> pd.Series:
-    """Exact stream minimum tracked by a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).min_value)
-
-
-@F.pandas_udf(T.DoubleType())
-def kll_max(images: pd.Series) -> pd.Series:
-    """Exact stream maximum tracked by a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).max_value)
 
 
 # ---------------------------------------------------------------------------
@@ -768,7 +677,7 @@ def fdt_topk(df: DataFrame, primary_cols: list[str], rest_col: str,
     theta-distinct(rest) → top-k by estimate."""
     sk = theta_sketch_agg(df, rest_col, by=primary_cols, lg_k=lg_k)
     return (sk.select(*primary_cols,
-                      F.round(theta_estimate("theta_sketch")).cast("long")
+                      F.theta_sketch_estimate("theta_sketch")
                       .alias("distinct_rest"))
             .orderBy(F.desc("distinct_rest"), *primary_cols)
             .limit(k))

@@ -9,8 +9,8 @@ the Spark engine the same entry point::
     register_sql_functions(spark)
     spark.sql('''
         SELECT c_nationkey,
-               CAST(theta_sketch_estimate(theta_sketch_build(c_custkey))
-                    AS BIGINT) AS distinct_customers
+               theta_sketch_estimate(theta_sketch_build(c_custkey))
+                   AS distinct_customers
         FROM customer GROUP BY c_nationkey ORDER BY c_nationkey''')
 
 SCALE BOUNDARY — read before using the *_build aggregates at 100 TB:
@@ -23,13 +23,27 @@ sketches: theta, HLL and KLL there are Spark's built-in DataSketches
 aggregates (map-side partial aggregation, no Python worker), the other
 families two-phase aggregates with O(groups x partitions x
 sketch_size) shuffle.  In SQL text the same built-ins are available
-directly (``theta_sketch_agg``, ``hll_sketch_agg``,
-``kll_sketch_agg_double``), and their images are what the scalars
-below read.  Two SQL patterns carry no penalty:
+directly, and their images are what the scalars read::
 
-- QUERYING sketch images (``theta_sketch_estimate``, ``kll_sketch_
-  quantile``, the pairwise set ops): scalar Arrow-batched UDFs over
-  already-built sketch columns.
+    SELECT c_nationkey, theta_sketch_estimate(theta_sketch_agg(c_custkey, 12))
+    FROM customer GROUP BY c_nationkey
+
+    SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(c_acctbal), 0.5),
+           hll_sketch_estimate(hll_sketch_agg(c_custkey))
+    FROM customer
+
+Two SQL patterns carry no penalty:
+
+- QUERYING sketch images.  ``theta_sketch_estimate`` and
+  ``hll_sketch_estimate`` are Spark's built-ins (BIGINT, the estimate
+  rounded); the pairwise set ops and ``kll_sketch_n/min/max`` are SQL
+  functions over the built-ins (``theta_union`` at the registry's
+  ``lg_k``, ``theta_intersection``, ``theta_difference``,
+  ``kll_sketch_get_n_double``, ``kll_sketch_get_quantile_double`` at
+  rank 0 and 1), so no Python worker runs.  Bounds, Jaccard, CPC and
+  frequent-items results, and ``kll_sketch_quantile``/``kll_sketch_rank``
+  (per-row ranks, which the built-in rejects as non-foldable) are
+  Arrow-batched Python UDFs.
 - MERGING sketch images (``theta_sketch_union``, ``hll_sketch_union``,
   ...): the input rows are already bounded-size partials (e.g. from a
   checkpoint or a two-phase build), so the raw-value shuffle IS the
@@ -82,13 +96,13 @@ def _update_keys(arr: pa.Array):
     return "long", arr.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def _theta_build(arr: pa.Array, lg_k: int, seed: int) -> bytes:
+def _theta_build(arr: pa.Array, lg_k: int) -> bytes:
     from ..sketches.murmur3 import theta_hash_bytes_batch
     kind, keys = _update_keys(arr)
     if kind == "bytes":
-        uh = theta_hash_bytes_batch(*keys, seed)
-        return theta.from_update_hashes(uh, lg_k, seed).to_bytes()
-    return theta.sketch_longs(keys, lg_k, seed).to_bytes()
+        uh = theta_hash_bytes_batch(*keys, DEFAULT_UPDATE_SEED)
+        return theta.from_update_hashes(uh, lg_k).to_bytes()
+    return theta.sketch_longs(keys, lg_k).to_bytes()
 
 
 def _hll_build(arr: pa.Array, lg_k: int) -> bytes:
@@ -100,13 +114,13 @@ def _hll_build(arr: pa.Array, lg_k: int) -> bytes:
     return hll.sketch_longs(keys, lg_k).to_bytes()
 
 
-def _cpc_build(arr: pa.Array, seed: int) -> bytes:
+def _cpc_build(arr: pa.Array) -> bytes:
     from ..sketches.murmur3 import hash128_bytes_batch
     kind, keys = _update_keys(arr)
     if kind == "bytes":
-        h0, h1 = hash128_bytes_batch(*keys, seed)
-        return cpc.from_hash_pair(h0, h1, cpc.DEFAULT_CPC_LG_K, seed).to_bytes()
-    return cpc.sketch_longs(keys, seed=seed).to_bytes()
+        h0, h1 = hash128_bytes_batch(*keys, DEFAULT_UPDATE_SEED)
+        return cpc.from_hash_pair(h0, h1, cpc.DEFAULT_CPC_LG_K).to_bytes()
+    return cpc.sketch_longs(keys).to_bytes()
 
 
 def _null_safe(f):
@@ -121,17 +135,15 @@ def register_sql_functions(spark: SparkSession,
                            lg_k: int = DEFAULT_LG_K,
                            hll_lg_k: int = HLL_DEFAULT_LG_K,
                            kll_k: int = KLL_DEFAULT_K,
-                           freq_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE,
-                           seed: int = DEFAULT_UPDATE_SEED) -> list[str]:
+                           freq_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE
+                           ) -> list[str]:
     """Register the sketch SQL functions on ``spark``; returns the
-    registered names.  Config (lg_k, k, seed) binds at registration —
-    one registry per config, matching the Hive adaptor model where the
-    UDAF instance owns its parameters.
-
-    ``seed`` applies to theta and CPC.  HLL always hashes with the
-    default seed, as the reference's HLL does: its image stores no seed
-    hash, so HLL images of other seeds could not be told apart on
-    merge."""
+    registered names.  Config (lg_k, k) binds at registration — one
+    registry per config, matching the Hive adaptor model where the
+    UDAF instance owns its parameters.  Every build hashes with the
+    default seed, the only one Spark's built-in scalars accept.
+    ``theta_sketch_estimate`` and ``hll_sketch_estimate`` are Spark's
+    own functions and are not registered."""
 
     # -- aggregates (GROUPED_AGG; see module docstring scale note).
     # The *_build ones are Arrow UDFs: they dispatch on the column's
@@ -139,13 +151,13 @@ def register_sql_functions(spark: SparkSession,
     # arrives as float64).
     @F.arrow_udf(T.BinaryType())
     def theta_sketch_build(v: pa.Array) -> bytes:
-        return _theta_build(v, lg_k, seed)
+        return _theta_build(v, lg_k)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def theta_sketch_union(imgs: pd.Series) -> bytes:
         sks = [theta.ThetaSketch.from_bytes(b) for b in imgs.dropna()]
         if not sks:   # all-NULL group (e.g. outer-join side) -> empty
-            return theta.empty(lg_k, seed).to_bytes()
+            return theta.empty(lg_k).to_bytes()
         return theta.union_many(sks, lg_k).to_bytes()
 
     @F.arrow_udf(T.BinaryType())
@@ -161,7 +173,7 @@ def register_sql_functions(spark: SparkSession,
 
     @F.arrow_udf(T.BinaryType())
     def cpc_sketch_build(v: pa.Array) -> bytes:
-        return _cpc_build(v, seed)
+        return _cpc_build(v)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def kll_sketch_build(v: pd.Series) -> bytes:
@@ -209,30 +221,35 @@ def register_sql_functions(spark: SparkSession,
     fns = {
         "theta_sketch_build": theta_sketch_build,
         "theta_sketch_union": theta_sketch_union,
-        "theta_sketch_estimate": A.theta_estimate,
         "theta_sketch_lower_bound": A.theta_lower_bound,
         "theta_sketch_upper_bound": A.theta_upper_bound,
-        "theta_sketch_union_pair": A.theta_union_pair,
-        "theta_sketch_intersect": A.theta_intersect_pair,
-        "theta_sketch_a_not_b": A.theta_a_not_b_pair,
         "theta_sketch_jaccard": A.theta_jaccard_pair,
         "theta_sketch_to_java": A.theta_to_java,
-        "theta_sketch_from_java": A.theta_from_java,
         "hll_sketch_build": hll_sketch_build,
         "hll_sketch_union": hll_sketch_union,
-        "hll_sketch_estimate": A.hll_estimate,
         "cpc_sketch_build": cpc_sketch_build,
         "cpc_sketch_estimate": cpc_sketch_estimate,
         "kll_sketch_build": kll_sketch_build,
         "kll_sketch_merge": kll_sketch_merge,
         "kll_sketch_quantile": kll_sketch_quantile,
         "kll_sketch_rank": kll_sketch_rank,
-        "kll_sketch_n": A.kll_n,
-        "kll_sketch_min": A.kll_min,
-        "kll_sketch_max": A.kll_max,
         "frequent_strings_sketch_build": frequent_strings_sketch_build,
         "frequent_strings_sketch_result": frequent_strings_sketch_result,
     }
     for name, fn in fns.items():
         spark.udf.register(name, fn)
-    return sorted(fns)
+
+    # -- scalars that are one built-in call: SQL functions, no Python
+    pair, one = "a BINARY, b BINARY", "sk BINARY"
+    sql_fns = {
+        "theta_sketch_union_pair": (pair, f"theta_union(a, b, {lg_k})"),
+        "theta_sketch_intersect": (pair, "theta_intersection(a, b)"),
+        "theta_sketch_a_not_b": (pair, "theta_difference(a, b)"),
+        "kll_sketch_n": (one, "kll_sketch_get_n_double(sk)"),
+        "kll_sketch_min": (one, "kll_sketch_get_quantile_double(sk, 0.0D)"),
+        "kll_sketch_max": (one, "kll_sketch_get_quantile_double(sk, 1.0D)"),
+    }
+    for name, (params, body) in sql_fns.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
+                  f"RETURN {body}")
+    return sorted([*fns, *sql_fns])

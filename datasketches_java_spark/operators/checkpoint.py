@@ -9,15 +9,16 @@ format-agnostic — `CheckpointStore(fmt="iceberg")` switches to
 Design:
   - A stage checkpoint is `{root}/{stage}/data` plus
     `{root}/{stage}/metrics` (one row per output partition:
-    partition_id, rows, min/max of the lineage key, wall-clock ms and
-    a KLL length-sketch image for drift checks between epochs).
+    partition_id, rows, min/max of the lineage key as strings, the
+    stage name and its wall-clock ms).
   - `run_stage(name, build)` = memoized execution: if the stage
     directory exists with Spark's _SUCCESS marker, read it back
     instead of recomputing — resume-mid-run is therefore "rerun the
     driver program"; completed stages are skipped, the first
     incomplete stage recomputes from the previous checkpoint.
-  - Lineage metrics are computed with one extra narrow aggregation
-    over spark_partition_id() — no second shuffle.
+  - Lineage metrics are one aggregation by spark_partition_id() over
+    the written stage, read back; its shuffle carries one partial row
+    per partition.
 """
 
 from __future__ import annotations

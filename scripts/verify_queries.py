@@ -44,18 +44,6 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
-def machine() -> tuple[int, str]:
-    """Spark sizing from this machine, as perfbench/harness.py sizes
-    it: one task slot per core of the CPU affinity mask (nproc), and a
-    quarter of MemAvailable (at least 1 GiB) as driver heap."""
-    cores = len(os.sched_getaffinity(0))
-    with open("/proc/meminfo") as f:
-        mem = {k: int(v.split()[0]) for k, v in
-               (line.split(":", 1) for line in f)}
-    avail_mb = mem.get("MemAvailable", mem["MemTotal"]) // 1024
-    return cores, f"{max(1024, avail_mb // 4)}m"
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else ""
@@ -63,10 +51,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from datasketches_java_spark.functions.session import get_spark
 
-    cores, driver_memory = machine()
-    spark = get_spark("verify_queries", cores=cores,
-                      shuffle_partitions=max(cores, 8),
-                      driver_memory=driver_memory)
+    spark = get_spark("verify_queries")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

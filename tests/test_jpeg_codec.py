@@ -184,3 +184,45 @@ def test_multiscan_rejected_cleanly():
         + new_payload + bytes(buf[i + 2 + ln:])
     with pytest.raises(ValueError, match="multi-scan|non-interleaved"):
         decode_jpeg(out)
+
+
+def _baseline_jpeg(n_components: int, size: int = 16) -> bytes:
+    """A valid 4:4:4 baseline JPEG with ``n_components`` flat planes
+    (4 is the layout of Adobe CMYK/YCCK files), all coded with the
+    luma tables of the codec's own block coder."""
+    import struct
+
+    from datasketches_java_spark.functions import _jpeg as J
+    q = J._quality_scale(J._K_LUMA_Q, 90)
+    dc, ac = J._encode_codes(*J._K_DC_LUMA), J._encode_codes(*J._K_AC_LUMA)
+
+    def chunk(marker: int, body: bytes) -> bytes:
+        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+    ids = range(1, n_components + 1)
+    out = bytearray(b"\xFF\xD8")
+    out += chunk(0xDB, bytes([0]) + bytes(q[J._ZIGZAG].tolist()))
+    out += chunk(0xC0, bytes([8]) + struct.pack(">HH", size, size)
+                 + bytes([n_components, *(b for c in ids for b in (c, 0x11, 0))]))
+    for cls, (bits, syms) in ((0, J._K_DC_LUMA), (1, J._K_AC_LUMA)):
+        out += chunk(0xC4, bytes([cls << 4]) + bytes(bits) + bytes(syms))
+    out += chunk(0xDA, bytes([n_components, *(b for c in ids for b in (c, 0)),
+                              0, 63, 0]))
+    bw, preds = J._BitWriter(), [0] * n_components
+    block = np.full((8, 8), 200.0, np.float32)
+    for _ in range((size // 8) ** 2):
+        for c in range(n_components):
+            preds[c] = J._encode_block(bw, block, q[J._ZIGZAG].astype(np.float32),
+                                       dc, ac, preds[c])
+    bw.flush()
+    return bytes(out) + bytes(bw.out) + b"\xFF\xD9"
+
+
+def test_only_gray_and_ycbcr_decode():
+    """1 and 3 components decode; any other count (CMYK/YCCK's 4)
+    raises ValueError instead of returning wrong pixels."""
+    for n in (1, 3):
+        assert decode_jpeg(_baseline_jpeg(n)).shape == (16, 16, 3)
+    for n in (4, 2):
+        with pytest.raises(ValueError, match="component"):
+            decode_jpeg(_baseline_jpeg(n))

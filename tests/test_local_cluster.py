@@ -1,7 +1,7 @@
 """local-cluster mode (separate executor JVMs + real shuffle
-transport) — the bench's --scaling-cluster path.  Guards the
-executor-PYTHONPATH plumbing in functions/session.get_spark: pandas
-UDFs must import the package inside executor-spawned Python workers,
+transport) of functions/session.get_spark.  Guards its
+executor-PYTHONPATH plumbing: pandas UDFs (here ``theta_to_java``)
+must import the package inside executor-spawned Python workers,
 which do NOT inherit the driver's sys.path (on a real cluster,
 --py-files provides this).
 
@@ -19,6 +19,7 @@ import sys
 _SCRIPT = r"""
 import time
 import numpy as np
+from pyspark.sql import functions as F
 from datasketches_java_spark.functions import sketch_aggs as A
 from datasketches_java_spark.functions.session import get_spark
 
@@ -36,7 +37,8 @@ assert execs >= 1, "no separate executor registered within 90s"
 df = spark.createDataFrame([(int(i),) for i in np.arange(5000)],
                            "v long").repartition(4)
 est = (A.theta_sketch_agg(df, "v", lg_k=14)
-       .select(A.theta_estimate("theta_sketch").alias("e")).collect()[0].e)
+       .select(F.theta_sketch_estimate(A.theta_to_java("theta_sketch")).alias("e"))
+       .collect()[0].e)
 assert est == 5000.0, est  # exact mode: lgK above n
 spark.stop()
 print("LC-OK")

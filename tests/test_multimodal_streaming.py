@@ -266,7 +266,6 @@ def test_simhash_ann_recall_at_near_dup(spark, embeddings):
 # ---------------------------------------------------------------------------
 
 def test_incremental_theta_state(spark, tmp_path):
-    from datasketches_java_spark.functions.sketch_aggs import theta_estimate
     from datasketches_java_spark.streaming.incremental import (
         incremental_theta_state)
     state = str(tmp_path / "st")
@@ -275,7 +274,7 @@ def test_incremental_theta_state(spark, tmp_path):
     incremental_theta_state(spark, b1, state, "v", by=["k"])
     merged = incremental_theta_state(spark, b2, state, "v", by=["k"])
     got = {r["k"]: int(round(r["est"])) for r in merged.select(
-        "k", theta_estimate("theta_sketch").alias("est")).collect()}
+        "k", F.theta_sketch_estimate("theta_sketch").alias("est")).collect()}
     # exact mode: distinct v per k over 0..199
     want = {k: len({v for v in range(200) if v % 3 == k}) for k in range(3)}
     assert got == want
@@ -284,7 +283,6 @@ def test_incremental_theta_state(spark, tmp_path):
 def test_incremental_theta_state_keeps_lg_k(spark, tmp_path):
     """The merge of batch 2 into the state keeps the batches' nominal
     size: 6,000 distinct values stay exact at lg_k=16."""
-    from datasketches_java_spark.functions.sketch_aggs import theta_estimate
     from datasketches_java_spark.streaming.incremental import (
         incremental_theta_state)
     state = str(tmp_path / "st16")
@@ -292,7 +290,7 @@ def test_incremental_theta_state_keeps_lg_k(spark, tmp_path):
         merged = incremental_theta_state(
             spark, spark.range(lo, hi).withColumnRenamed("id", "v"),
             state, "v", by=[], lg_k=16)
-    assert merged.select(theta_estimate("theta_sketch")).first()[0] == 6_000.0
+    assert merged.select(F.theta_sketch_estimate("theta_sketch")).first()[0] == 6_000.0
 
 
 def test_delta_new_docs(spark):
@@ -325,7 +323,6 @@ def test_streaming_sketch_query(spark, tmp_path):
     """Structured Streaming micro-batch path: rate-limited file stream
     of events → windowed theta state; result equals batch answer."""
     import pandas as pd
-    from datasketches_java_spark.functions.sketch_aggs import theta_estimate
     from datasketches_java_spark.streaming.incremental import (
         incremental_sketch_stream)
     src = tmp_path / "src"
@@ -346,7 +343,7 @@ def test_streaming_sketch_query(spark, tmp_path):
     q.awaitTermination(120)
     state = spark.read.parquet(str(tmp_path / "state" / "theta_state"))
     got = state.select("win", "etype",
-                       F.round(theta_estimate("theta_sketch")).cast("long")
+                       F.round(F.theta_sketch_estimate("theta_sketch")).cast("long")
                        .alias("users"))
     batch = (spark.createDataFrame(pdf)
              .withColumn("win", F.window("ts", "30 minutes").start.cast("string"))
@@ -418,12 +415,11 @@ def test_media_exact_dedup_via_binary_theta(spark, media):
     two-phase merge — the media-dedup key path at 100 TB (hash the
     bytes once, shuffle 8-byte images, never the blobs)."""
     from pyspark.sql import functions as F
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     # duplicate every blob 3x across partitions
     tripled = media.union(media).union(media).repartition(8)
     sk = theta_sketch_agg(tripled, "blob", lg_k=12)
-    est = sk.select(theta_estimate("theta_sketch")).head()[0]
+    est = sk.select(F.theta_sketch_estimate("theta_sketch")).head()[0]
     assert round(est) == 20
     exact = tripled.select(F.sha2("blob", 256)).distinct().count()
     assert exact == 20

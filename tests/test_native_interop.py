@@ -5,6 +5,8 @@ the engine's images heapify in the JVM (reached as
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -141,16 +143,16 @@ def test_builtin_theta_hashes_numbers_like_engine(spark, dtype):
 
 
 def test_exact_sketches_stay_exact_through_pair_set_ops(spark):
-    """Compact images carry no nominal k; the reader infers one from
-    the count that keeps a pairwise union of exact sketches exact."""
+    """The built-in pairwise union takes its nominal size (default lgK
+    12); at the inputs' lg_k a union of exact sketches stays exact."""
     from datasketches_java_spark.functions import sketch_aggs as A
     a = A.theta_sketch_agg(spark.range(0, 15_000), "id", lg_k=16)
     b = A.theta_sketch_agg(spark.range(5_000, 20_000), "id", lg_k=16)
     row = (a.withColumnRenamed("theta_sketch", "a")
            .crossJoin(b.withColumnRenamed("theta_sketch", "b"))
-           .select(A.theta_estimate(A.theta_union_pair("a", "b")).alias("u"),
-                   A.theta_estimate(A.theta_intersect_pair("a", "b")).alias("i"),
-                   A.theta_estimate(A.theta_a_not_b_pair("a", "b")).alias("d"))
+           .select(F.theta_sketch_estimate(F.theta_union("a", "b", 16)).alias("u"),
+                   F.theta_sketch_estimate(F.theta_intersection("a", "b")).alias("i"),
+                   F.theta_sketch_estimate(F.theta_difference("a", "b")).alias("d"))
            .first())
     assert (row.u, row.i, row.d) == (20_000.0, 10_000.0, 5_000.0)
 
@@ -162,7 +164,7 @@ def test_engine_images_feed_the_builtin_union(spark):
     df = spark.createDataFrame([(bytearray(p.to_bytes()),) for p in parts],
                                "theta_sketch binary")
     est = (A.theta_union_agg(df)
-           .select(A.theta_estimate("theta_sketch")).first()[0])
+           .select(F.theta_sketch_estimate("theta_sketch")).first()[0])
     assert est == theta.union_many(parts).estimate() == 1_400.0
 
 
@@ -184,5 +186,72 @@ def test_legacy_image_in_builtin_union_raises(spark):
         A.theta_union_agg(df).collect()
     upgraded = df.select(A.theta_to_java("theta_sketch").alias("theta_sketch"))
     est = A.theta_union_agg(upgraded).select(
-        A.theta_estimate("theta_sketch")).first()[0]
+        F.theta_sketch_estimate("theta_sketch")).first()[0]
     assert est == 1000.0
+
+
+# -- built-in scalars vs the engine's cores ----------------------------------
+
+@pytest.mark.parametrize("mode", ["exact", "estimation"])
+def test_builtin_scalars_match_engine_cores(spark, ds, mode):
+    """On engine images, Spark's built-in scalars — directly and through
+    the SQL registry's aliases — give the engine cores' answers: the
+    theta estimate, union at the registry's lg_k, intersection and
+    difference; KLL quantiles, ranks, n, and the exact min and max at
+    ranks 0 and 1.  The HLL estimate is the JVM's, rounded, and the
+    engine's composite estimate lies inside the JVM's bounds.  The
+    estimate is BIGINT, and a NULL image gives NULL."""
+    from datasketches_java_spark.config import DEFAULT_LG_K
+    from datasketches_java_spark.functions.sql_registry import (
+        register_sql_functions)
+    n, kll_n = (3_000, 150) if mode == "exact" else (30_000, 50_000)
+    a = theta.sketch_longs(np.arange(n), DEFAULT_LG_K)
+    b = theta.sketch_longs(np.arange(n // 3, n + n // 3), DEFAULT_LG_K)
+    assert a.is_estimation_mode == (mode == "estimation")
+    x = np.random.default_rng(5).standard_normal(kll_n)
+    kll = KllDoublesSketch.new(200).update_batch(x)
+    h = hll.sketch_longs(np.arange(n), 12)
+    values = [float(v) for v in x[:5]] + [-10.0, 0.0, 10.0]
+
+    def doubles(xs):
+        return f"array({', '.join(f'{v!r}D' for v in xs)})"
+
+    register_sql_functions(spark)
+    spark.createDataFrame(
+        [(0, *(bytearray(s.to_bytes()) for s in (a, b, kll, h))),
+         (1, None, None, None, None)],
+        "id int, a binary, b binary, k binary, h binary",
+    ).createOrReplaceTempView("engine_images")
+    got, null = spark.sql(f"""
+        SELECT theta_sketch_estimate(a) est,
+               typeof(theta_sketch_estimate(a)) est_type,
+               theta_sketch_union_pair(a, b) u,
+               theta_sketch_estimate(theta_sketch_union_pair(a, b)) u_est,
+               theta_sketch_intersect(a, b) i,
+               theta_sketch_estimate(theta_sketch_intersect(a, b)) i_est,
+               theta_sketch_a_not_b(a, b) d,
+               theta_sketch_estimate(theta_sketch_a_not_b(a, b)) d_est,
+               hll_sketch_estimate(h) hll,
+               kll_sketch_n(k) n, kll_sketch_min(k) lo, kll_sketch_max(k) hi,
+               kll_sketch_get_quantile_double(k, {doubles(INTERIOR_RANKS)}) qs,
+               kll_sketch_get_rank_double(k, {doubles(values)}) rs
+        FROM engine_images ORDER BY id""").collect()
+
+    def rounded(e: float) -> int:
+        return math.floor(e + 0.5)
+
+    assert got.est_type == null.est_type == "bigint"
+    assert got.est == rounded(a.estimate())
+    for col, want in (("u", theta.union_many([a, b], DEFAULT_LG_K)),
+                      ("i", theta.intersect(a, b)), ("d", theta.a_not_b(a, b))):
+        img = theta.ThetaSketch.from_bytes(bytes(got[col]))
+        assert (img.theta, img.hashes.tolist()) == (want.theta, want.hashes.tolist())
+        assert got[f"{col}_est"] == rounded(want.estimate())
+    j = ds.hll.HllSketch.heapify(_wrap(ds, h.to_bytes()))
+    assert got.hll == rounded(j.getEstimate())
+    assert j.getLowerBound(1) <= h.estimate() <= j.getUpperBound(1)
+    assert (got.n, got.lo, got.hi) == (kll_n, x.min(), x.max()) == \
+        (kll.n, kll.min_value, kll.max_value)
+    assert got.qs == kll.quantiles(list(INTERIOR_RANKS))
+    assert got.rs == [kll.rank(v) for v in values]
+    assert all(v is None for k, v in null.asDict().items() if k != "est_type")

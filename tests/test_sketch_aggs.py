@@ -22,14 +22,14 @@ def orders(spark):
 def test_theta_exact_mode_global(spark, lineitem):
     exact = lineitem.select("l_orderkey").distinct().count()
     out = SA.theta_sketch_agg(lineitem, "l_orderkey", lg_k=16)
-    got = out.select(SA.theta_estimate("theta_sketch").alias("est")).collect()[0]["est"]
+    got = out.select(F.theta_sketch_estimate("theta_sketch").alias("est")).collect()[0]["est"]
     assert got == float(exact)
 
 
 def test_theta_estimation_mode_grouped(spark, lineitem):
     out = SA.theta_sketch_agg(lineitem, "l_partkey", by=["l_returnflag"], lg_k=12)
     got = {r["l_returnflag"]: r["est"] for r in
-           out.select("l_returnflag", SA.theta_estimate("theta_sketch").alias("est")).collect()}
+           out.select("l_returnflag", F.theta_sketch_estimate("theta_sketch").alias("est")).collect()}
     exact = {r["l_returnflag"]: r["c"] for r in
              lineitem.groupBy("l_returnflag")
              .agg(F.countDistinct("l_partkey").alias("c")).collect()}
@@ -44,8 +44,8 @@ def test_theta_set_ops_pairwise(spark, orders):
     b = SA.theta_sketch_agg(orders.filter(F.col("o_orderstatus") == "O"),
                             "o_custkey", lg_k=16).withColumnRenamed("theta_sketch", "skb")
     row = (a.crossJoin(b)
-           .select(SA.theta_estimate(SA.theta_intersect_pair("ska", "skb")).alias("inter"),
-                   SA.theta_estimate(SA.theta_a_not_b_pair("ska", "skb")).alias("diff"),
+           .select(F.theta_sketch_estimate(F.theta_intersection("ska", "skb")).alias("inter"),
+                   F.theta_sketch_estimate(F.theta_difference("ska", "skb")).alias("diff"),
                    SA.theta_jaccard_pair("ska", "skb").alias("jac"))
            .collect()[0])
     fa = {r[0] for r in orders.filter("o_orderstatus = 'F'").select("o_custkey").collect()}
@@ -58,7 +58,7 @@ def test_theta_set_ops_pairwise(spark, orders):
 def test_hll_grouped(spark, lineitem):
     out = SA.hll_sketch_agg(lineitem, "l_orderkey", by=["l_linestatus"])
     got = {r["l_linestatus"]: r["est"] for r in
-           out.select("l_linestatus", SA.hll_estimate("hll_sketch").alias("est")).collect()}
+           out.select("l_linestatus", F.hll_sketch_estimate("hll_sketch").alias("est")).collect()}
     exact = {r["l_linestatus"]: r["c"] for r in
              lineitem.groupBy("l_linestatus")
              .agg(F.countDistinct("l_orderkey").alias("c")).collect()}
@@ -69,8 +69,8 @@ def test_hll_grouped(spark, lineitem):
 def test_kll_quantiles(spark, lineitem):
     out = SA.kll_sketch_agg(lineitem, "l_extendedprice", k=200)
     row = out.select(
-        SA.kll_quantile(0.5)("kll_sketch").alias("p50"),
-        SA.kll_n("kll_sketch").alias("n")).collect()[0]
+        F.kll_sketch_get_quantile_double("kll_sketch", F.lit(0.5)).alias("p50"),
+        F.kll_sketch_get_n_double("kll_sketch").alias("n")).collect()[0]
     n = lineitem.count()
     assert row["n"] == n
     prices = [r[0] for r in lineitem.select("l_extendedprice").collect()]
@@ -104,8 +104,7 @@ def test_theta_string_agg_reference_hash_path(spark):
     update(String) would produce (scalar parity path), and the
     estimate is exact below k."""
     import numpy as np
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     from datasketches_java_spark.sketches.murmur3 import theta_hash_str
     from datasketches_java_spark.sketches.theta import ThetaSketch
     words = [f"wörd-{i % 600}" for i in range(5000)] + ["", None]
@@ -118,17 +117,16 @@ def test_theta_string_agg_reference_hash_path(spark):
         dtype=np.uint64))
     assert np.array_equal(sk.hashes, want)
     est = spark.createDataFrame([(img,)], "theta_sketch binary").select(
-        theta_estimate("theta_sketch")).collect()[0][0]
+        F.theta_sketch_estimate("theta_sketch")).collect()[0][0]
     assert round(est) == 600
 
 
 def test_hll_string_agg(spark):
-    from datasketches_java_spark.functions.sketch_aggs import (
-        hll_estimate, hll_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import hll_sketch_agg
     words = [f"token{i % 300}" for i in range(3000)]
     df = spark.createDataFrame([(w,) for w in words], "s string")
     est = hll_sketch_agg(df, "s").select(
-        hll_estimate("hll_sketch")).collect()[0][0]
+        F.hll_sketch_estimate("hll_sketch")).collect()[0][0]
     # linear-counting range at n/m ~ 0.07 carries a few-% estimator
     # noise; exactness is only expected at tiny n (the oracle queries)
     assert abs(est - 300) / 300 < 0.05

@@ -191,20 +191,15 @@ def test_kll_and_freq_scalars_return_null_on_null_image(sql, spark):
     assert (row["q"], row["r"], row["f"]) == (None, None, None)
 
 
-def test_hll_build_ignores_registry_seed(sql, spark):
-    """HLL images store no seed hash, so a registry with its own seed
-    still builds HLL with the default one: its images equal the
-    built-in's and merge with them."""
+def test_hll_build_registers_equal_builtin(sql, spark):
+    """The SQL hll_sketch_build hashes with the default seed, as the
+    built-in does: its images equal the built-in's and merge with them."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from datasketches_java_spark.sketches import hll
     spark.range(5_000).createOrReplaceTempView("hll_ids")
     builtin = spark.range(5_000).agg(F.hll_sketch_agg("id", 12)).first()[0]
-    try:
-        register_sql_functions(spark, seed=7)
-        img = sql("SELECT hll_sketch_build(id) FROM hll_ids").first()[0]
-    finally:
-        register_sql_functions(spark)
+    img = sql("SELECT hll_sketch_build(id) FROM hll_ids").first()[0]
     assert np.array_equal(hll.HllSketch.from_bytes(img).regs,
                           hll.HllSketch.from_bytes(builtin).regs)

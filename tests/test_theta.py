@@ -193,8 +193,7 @@ def test_binary_column_agg_matches_string_agg(spark):
     produce the byte-identical sketch as the STRING column (the
     reference hashes the same byte stream in both overloads)."""
     from pyspark.sql import functions as F
-    from datasketches_java_spark.functions.sketch_aggs import (
-        theta_estimate, theta_sketch_agg)
+    from datasketches_java_spark.functions.sketch_aggs import theta_sketch_agg
     df = spark.createDataFrame(
         [(f"item-{i % 500}",) for i in range(2000)], ["s"])
     df = df.withColumn("b", F.col("s").cast("binary"))
@@ -202,5 +201,5 @@ def test_binary_column_agg_matches_string_agg(spark):
     img_b = theta_sketch_agg(df, "b", lg_k=12).head()[0]
     assert bytes(img_s) == bytes(img_b)
     est = theta_sketch_agg(df, "b", lg_k=12).select(
-        theta_estimate("theta_sketch")).head()[0]
+        F.theta_sketch_estimate("theta_sketch")).head()[0]
     assert round(est) == 500
