@@ -380,33 +380,25 @@ def _q_kll_price_stats(spark: SparkSession, sf: str) -> DataFrame:
 def _q_freq_orderpriority(spark: SparkSession, sf: str) -> DataFrame:
     from datasketches_java_spark.functions.sketch_aggs import (
         freq_items, freq_sketch_agg)
-    orders = _read(spark, sf, "orders")
-    sk = freq_sketch_agg(orders, "o_orderpriority", max_map_size=1024)
-    items = freq_items(0)
-    return (sk.select(F.explode(items("freq_sketch")).alias("fi"))
+    sk = freq_sketch_agg(_read(spark, sf, "orders"), "o_orderpriority")
+    return (sk.select(F.explode(freq_items(0)("freq_sketch")).alias("fi"))
             .select(F.col("fi.item").alias("o_orderpriority"),
                     F.col("fi.estimate").alias("cnt"))
             .orderBy("o_orderpriority"))
 
 
 def _q_freq_orderpriority_wire(spark: SparkSession, sf: str) -> DataFrame:
-    """freq_orderpriority_counts with the sketch column exported to
-    the reference's string ItemsSketch wire format and heapified back
-    before querying (frequencies/ItemsSketch.java:494 layout +
-    ArrayOfStringsSerDe) — the Hive/Pig string-column interop path,
-    exercised inside the oracle gate."""
-    from datasketches_java_spark.functions.sketch_aggs import (
-        freq_items, freq_items_from_java, freq_items_to_java,
-        freq_sketch_agg)
-    orders = _read(spark, sf, "orders")
-    sk = freq_sketch_agg(orders, "o_orderpriority", max_map_size=1024)
-    wire = sk.select(freq_items_from_java(freq_items_to_java("freq_sketch"))
-                     .alias("freq_sketch"))
-    items = freq_items(0)
-    return (wire.select(F.explode(items("freq_sketch")).alias("fi"))
-            .select(F.col("fi.item").alias("o_orderpriority"),
-                    F.col("fi.estimate").alias("cnt"))
-            .orderBy("o_orderpriority"))
+    """freq_orderpriority_counts read straight off the reference wire
+    format: the sketch column is the string ItemsSketch image
+    (frequencies/ItemsSketch.java:494 layout + ArrayOfStringsSerDe)
+    that datasketches-java writes inside Spark's built-in
+    ``approx_top_k_accumulate``, and the engine's reader
+    (``freq_serde.items_from_java_bytes``) heapifies it with no
+    conversion step — the Hive/Pig string-column interop path, JVM
+    writer -> engine reader, inside the oracle gate.  Since that image
+    is the family's only image, the plan is freq_orderpriority_counts'
+    own."""
+    return _q_freq_orderpriority(spark, sf)
 
 
 def _q_freq_heavy_suppliers(spark: SparkSession, sf: str) -> DataFrame:
@@ -419,10 +411,9 @@ def _q_freq_heavy_suppliers(spark: SparkSession, sf: str) -> DataFrame:
     in estimation mode; in exact mode lb == estimate."""
     from datasketches_java_spark.functions.sketch_aggs import (
         freq_items, freq_sketch_agg)
-    li = _read(spark, sf, "lineitem").withColumn(
-        "suppkey_str", F.col("l_suppkey").cast("string"))
+    li = _read(spark, sf, "lineitem")
     thresh = li.agg(F.floor(F.count(F.lit(1)) / 120).alias("thresh"))
-    sk = freq_sketch_agg(li, "suppkey_str", max_map_size=1024)
+    sk = freq_sketch_agg(li, "l_suppkey")
     items = freq_items(0)
     return (sk.select(F.explode(items("freq_sketch")).alias("fi"))
             .crossJoin(F.broadcast(thresh))

@@ -9,22 +9,26 @@ independent of row count.
 
 Two implementations of that shape:
 
-- theta, HLL and KLL use Spark's built-in DataSketches aggregates
-  (``theta_sketch_agg``, ``theta_union_agg``, ``hll_sketch_agg``,
-  ``kll_sketch_agg_double``; datasketches-java in the JVM, map-side
+- theta, HLL, KLL and frequent items use Spark's built-in DataSketches
+  aggregates (``theta_sketch_agg``, ``theta_union_agg``,
+  ``hll_sketch_agg``, ``kll_sketch_agg_double``,
+  ``approx_top_k_accumulate``; datasketches-java in the JVM, map-side
   partial aggregation, no Python worker).  Their images are the
-  reference's compact images, which the engine's ``sketches.theta``,
-  ``hll`` and ``kll`` read and write.  Spark's built-in scalars read
-  them too, so estimates, set operations and quantiles are plain
-  column expressions: ``F.theta_sketch_estimate``, ``F.theta_union``
-  (pass the lgK), ``F.theta_intersection``, ``F.theta_difference``,
-  ``F.hll_sketch_estimate``, ``F.kll_sketch_get_quantile_double``
-  (rank 0 and 1 give the exact min and max), ``F.kll_sketch_get_rank_double``
-  and ``F.kll_sketch_get_n_double``.  The UDFs below cover only what
-  Spark lacks: bounds, Jaccard and the image normalisers.
-- frequent items, REQ, CPC, tuple and sampling, which Spark lacks, use
-  ``_two_phase``: mapInPandas (partial) + groupBy().applyInPandas
-  (final), Arrow-batched, no per-row Python.
+  reference's images (compact theta, HLL_8, compact KLL doubles, the
+  string ItemsSketch), which the engine's ``sketches.theta``, ``hll``,
+  ``kll`` and ``frequencies`` read and write.  Spark's built-in scalars
+  read the first three too, so estimates, set operations and quantiles
+  are plain column expressions: ``F.theta_sketch_estimate``,
+  ``F.theta_union`` (pass the lgK), ``F.theta_intersection``,
+  ``F.theta_difference``, ``F.hll_sketch_estimate``,
+  ``F.kll_sketch_get_quantile_double`` (rank 0 and 1 give the exact min
+  and max), ``F.kll_sketch_get_rank_double`` and
+  ``F.kll_sketch_get_n_double``.  The UDFs below cover only what Spark
+  lacks: bounds, Jaccard, frequent-item rows with their bounds, and the
+  image normalisers.
+- REQ, CPC, tuple and sampling, which Spark lacks, use ``_two_phase``:
+  mapInPandas (partial) + groupBy().applyInPandas (final),
+  Arrow-batched, no per-row Python.
 """
 
 from __future__ import annotations
@@ -321,17 +325,6 @@ def kll_items_quantiles(ranks: list[float], dtype: str = "long",
     return qs
 
 
-def kll_items_rank(value, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a
-    generic-item KLL image column (comparator order)."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        from ..sketches.kll_items import KllItemsSketch
-        return images.map(
-            lambda b: KllItemsSketch.from_bytes(b).rank(value, inclusive))
-    return r
-
-
 # ---------------------------------------------------------------------------
 # REQ (relative-error quantiles)
 # ---------------------------------------------------------------------------
@@ -384,41 +377,24 @@ def req_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
     return qs
 
 
-def req_rank(value: float, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a REQ
-    image column."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        from ..sketches.req import ReqSketch
-        return images.map(
-            lambda b: ReqSketch.from_bytes(b).rank(value, inclusive))
-    return r
-
-
 # ---------------------------------------------------------------------------
 # frequent items
 # ---------------------------------------------------------------------------
 
-def freq_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                    max_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE,
-                    weight_col: str | None = None) -> DataFrame:
-    """groupBy(by).agg(frequent_items(col[, weight])) -> by +
-    freq_sketch:binary — two-phase heavy-hitters aggregation
-    (frequencies/ItemsSketch update/merge with median-purge)."""
-    by = by or []
-    value_cols = [col] + ([weight_col] if weight_col else [])
-
-    def build(grp: pd.DataFrame) -> bytes:
-        w = grp[weight_col].to_numpy().astype(np.int64) if weight_col else None
-        return ItemsSketch(max_map_size).update_batch(grp[col].tolist(), w).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = ItemsSketch.from_bytes(imgs[0])
-        for b in imgs[1:]:
-            out.merge(ItemsSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, value_cols, build, merge, "freq_sketch")
+def freq_sketch_agg(df: DataFrame, col: str,
+                    by: list[str] | None = None) -> DataFrame:
+    """groupBy(by).agg(frequent_items(col)) -> by + freq_sketch:binary,
+    with Spark's built-in ``approx_top_k_accumulate`` over the column
+    cast to STRING (datasketches-java ItemsSketch, map-side partial
+    aggregation, no Python worker).  It tracks
+    ``FREQ_DEFAULT_MAX_MAP_SIZE`` items (lgMaxMapSize 11, 1,536
+    counters), so a group with up to that many distinct items stays
+    exact; NULLs are dropped, and an all-NULL group gives the empty
+    image.  The image is the reference's string ItemsSketch image
+    (``freq_serde``)."""
+    acc = F.call_function("approx_top_k_accumulate", F.col(col).cast("string"),
+                          F.lit(FREQ_DEFAULT_MAX_MAP_SIZE))
+    return df.groupBy(*(by or [])).agg(acc.getField("sketch").alias("freq_sketch"))
 
 
 _FREQ_ROW = T.ArrayType(T.StructType([
@@ -429,34 +405,14 @@ _FREQ_ROW = T.ArrayType(T.StructType([
 ]))
 
 
-@F.pandas_udf(T.BinaryType())
-def freq_items_to_java(images: pd.Series) -> pd.Series:
-    """Engine frequent-items image → reference string ItemsSketch
-    image (frequencies/ItemsSketch.toByteArray:494 with
-    ArrayOfStringsSerDe payloads)."""
-    from ..sketches import freq_serde
-    return images.map(
-        lambda b: freq_serde.items_to_java_bytes(ItemsSketch.from_bytes(b)))
-
-
-@F.pandas_udf(T.BinaryType())
-def freq_items_from_java(images: pd.Series) -> pd.Series:
-    """Reference string ItemsSketch image → engine image."""
-    from ..sketches import freq_serde
-    return images.map(
-        lambda b: freq_serde.items_from_java_bytes(b).to_bytes())
-
-
 def freq_items(threshold: int, error_type: str = "NO_FALSE_POSITIVES") -> Callable:
     """Scalar UDF factory: (item, estimate, lb, ub) heavy-hitter rows
     above ``threshold`` from a freq image column, under the chosen
     error regime (NO_FALSE_POSITIVES | NO_FALSE_NEGATIVES)."""
     @F.pandas_udf(_FREQ_ROW)
     def items(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: [
-            (str(i), e, lb, ub)
-            for i, e, lb, ub in ItemsSketch.from_bytes(b).frequent_items(
-                threshold, error_type)])
+        return images.map(lambda b: ItemsSketch.from_bytes(b).frequent_items(
+            threshold, error_type))
     return items
 
 
@@ -567,17 +523,6 @@ def aod_from_java(images: pd.Series) -> pd.Series:
     from ..sketches import tuple_serde
     return images.map(
         lambda b: tuple_serde.aod_from_java_bytes(b).to_bytes())
-
-
-@F.pandas_udf(T.DoubleType())
-def tuple_jaccard_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaccard estimate of two tuple-sketch images
-    (tuple/JaccardSimilarity.java:41)."""
-    from ..sketches import tuple as tpl
-    return pd.Series([
-        tpl.jaccard(tpl.TupleSketch.from_bytes(x),
-                    tpl.TupleSketch.from_bytes(y))[1]
-        for x, y in zip(a, b)])
 
 
 def cpc_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,

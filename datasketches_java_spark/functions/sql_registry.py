@@ -19,11 +19,11 @@ registered GROUPED_AGG UDF ships RAW VALUES to the reducer
 (``AggregateInPandasExec`` has no map-side combine).  Results are
 identical at any scale, but shuffle volume is O(rows).  The DataFrame
 builds in ``functions/sketch_aggs.py`` are the scale path for BUILDING
-sketches: theta, HLL and KLL there are Spark's built-in DataSketches
-aggregates (map-side partial aggregation, no Python worker), the other
-families two-phase aggregates with O(groups x partitions x
-sketch_size) shuffle.  In SQL text the same built-ins are available
-directly, and their images are what the scalars read::
+sketches: theta, HLL, KLL and frequent items there are Spark's built-in
+DataSketches aggregates (map-side partial aggregation, no Python
+worker), the other families two-phase aggregates with O(groups x
+partitions x sketch_size) shuffle.  In SQL text the same built-ins are
+available directly, and their images are what the scalars read::
 
     SELECT c_nationkey, theta_sketch_estimate(theta_sketch_agg(c_custkey, 12))
     FROM customer GROUP BY c_nationkey
@@ -31,6 +31,14 @@ directly, and their images are what the scalars read::
     SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(c_acctbal), 0.5),
            hll_sketch_estimate(hll_sketch_agg(c_custkey))
     FROM customer
+
+    SELECT frequent_strings_sketch_result(
+               approx_top_k_accumulate(o_orderpriority, 1024).sketch, 0)
+    FROM orders
+
+``frequent_strings_sketch_build`` writes the same string ItemsSketch
+image as ``approx_top_k_accumulate(...).sketch``, without the 8 bytes
+Spark appends, so Spark's ``approx_top_k_estimate`` does not read it.
 
 Two SQL patterns carry no penalty:
 
@@ -132,15 +140,13 @@ def _null_safe(f):
 
 
 def register_sql_functions(spark: SparkSession,
-                           lg_k: int = DEFAULT_LG_K,
-                           hll_lg_k: int = HLL_DEFAULT_LG_K,
-                           kll_k: int = KLL_DEFAULT_K,
-                           freq_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE
-                           ) -> list[str]:
+                           lg_k: int = DEFAULT_LG_K) -> list[str]:
     """Register the sketch SQL functions on ``spark``; returns the
-    registered names.  Config (lg_k, k) binds at registration — one
+    registered names.  The theta ``lg_k`` binds at registration — one
     registry per config, matching the Hive adaptor model where the
-    UDAF instance owns its parameters.  Every build hashes with the
+    UDAF instance owns its parameters; HLL, KLL and frequent items use
+    ``HLL_DEFAULT_LG_K``, ``KLL_DEFAULT_K`` and
+    ``FREQ_DEFAULT_MAX_MAP_SIZE``.  Every build hashes with the
     default seed, the only one Spark's built-in scalars accept.
     ``theta_sketch_estimate`` and ``hll_sketch_estimate`` are Spark's
     own functions and are not registered."""
@@ -162,13 +168,13 @@ def register_sql_functions(spark: SparkSession,
 
     @F.arrow_udf(T.BinaryType())
     def hll_sketch_build(v: pa.Array) -> bytes:
-        return _hll_build(v, hll_lg_k)
+        return _hll_build(v, HLL_DEFAULT_LG_K)
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def hll_sketch_union(imgs: pd.Series) -> bytes:
         sks = [hll.HllSketch.from_bytes(b) for b in imgs.dropna()]
         if not sks:
-            return hll.empty(hll_lg_k).to_bytes()
+            return hll.empty(HLL_DEFAULT_LG_K).to_bytes()
         return hll.union_many(sks).to_bytes()
 
     @F.arrow_udf(T.BinaryType())
@@ -177,19 +183,19 @@ def register_sql_functions(spark: SparkSession,
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def kll_sketch_build(v: pd.Series) -> bytes:
-        return KllDoublesSketch.new(kll_k).update_batch(
+        return KllDoublesSketch.new(KLL_DEFAULT_K).update_batch(
             v.dropna().to_numpy().astype(np.float64)).to_bytes()
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def kll_sketch_merge(imgs: pd.Series) -> bytes:
-        out = KllDoublesSketch.new(kll_k)
+        out = KllDoublesSketch.new(KLL_DEFAULT_K)
         for b in imgs.dropna():
             out.merge(KllDoublesSketch.from_bytes(b))
         return out.to_bytes()
 
     @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
     def frequent_strings_sketch_build(v: pd.Series) -> bytes:
-        return ItemsSketch(freq_map_size).update_batch(
+        return ItemsSketch(FREQ_DEFAULT_MAX_MAP_SIZE).update_batch(
             v.dropna().tolist()).to_bytes()
 
     # -- scalars: parameterized query functions (image, arg) ----------

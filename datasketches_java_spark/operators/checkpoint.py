@@ -16,9 +16,12 @@ Design:
     instead of recomputing — resume-mid-run is therefore "rerun the
     driver program"; completed stages are skipped, the first
     incomplete stage recomputes from the previous checkpoint.
-  - Lineage metrics are one aggregation by spark_partition_id() over
-    the written stage, read back; its shuffle carries one partial row
-    per partition.
+  - Lineage metrics are one aggregation over the written stage, read
+    back, grouped by the output partition that wrote each row: the
+    part number in its file name (``part-NNNNN-…`` for parquet,
+    ``NNNNN-…`` for Iceberg).  Not spark_partition_id(): Spark packs
+    small files into one read split.  The shuffle carries one partial
+    row per file.
 """
 
 from __future__ import annotations
@@ -95,7 +98,8 @@ class CheckpointStore:
         else:
             agg += [F.lit(None).cast("string").alias("lineage_min"),
                     F.lit(None).cast("string").alias("lineage_max")]
-        m = (df.withColumn("partition_id", F.spark_partition_id())
+        part = F.regexp_extract(F.input_file_name(), r"/(?:part-)?(\d+)-[^/]*$", 1)
+        m = (df.withColumn("partition_id", part.cast("int"))
                .groupBy("partition_id").agg(*agg)
                .withColumn("stage", F.lit(stage))
                .withColumn("wall_ms", F.lit(wall_ms)))

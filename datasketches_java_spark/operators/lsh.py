@@ -14,11 +14,11 @@ Scale design (100 TB / 10^12 docs):
     the north rule requires.  Connectivity is preserved (star edges
     keep the bucket one component for clustering) while edge count is
     bounded.
-  - Hot buckets are *detected* with the frequent-items UDAF
-    (frequencies/LongsSketch.java counterpart) for metrics, and the
-    pair-generation shuffle is salted by doc hash so that even a
-    pathological band hash distributes across
-    ``spark.sql.shuffle.partitions`` tasks before the window runs.
+  - Hot buckets are counted exactly (``hot_buckets``: one groupBy
+    count over the bucket keys) for metrics, and the pair-generation
+    shuffle is salted by doc hash so that even a pathological band
+    hash distributes across ``spark.sql.shuffle.partitions`` tasks
+    before the window runs.
   - Pair dedup across the 32 bands is a map-side-combinable distinct.
   - The verification join re-attaches shingle arrays by id; exact
     Jaccard is F.array_intersect/array_union — JVM-side, codegen

@@ -33,8 +33,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 from ._bounds_tables import (
     HLL_NON_HIP_LB,
     HLL_NON_HIP_UB,
@@ -243,10 +241,6 @@ def approximate_upper_bound_on_p(n: int, k: int, num_stdevs: float) -> float:
         return 1.0 - delta ** (1.0 / n)
     x = _abramowitz_stegun_26_5_22(n - k, k + 1, num_stdevs)
     return 1.0 - x
-
-
-def estimate_unknown_p(n: int, k: int) -> float:
-    return 0.5 if n == 0 else k / n
 
 
 # ---------------------------------------------------------------------------

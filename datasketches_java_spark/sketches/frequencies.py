@@ -15,11 +15,14 @@ Re-expresses frequencies/LongsSketch.java:145 and ItemsSketch.java:150:
 
 In exact mode (distinct items never exceeded capacity; offset == 0)
 all counts are exact — the oracle-comparison mode.
+
+The one image is the reference's string ItemsSketch image
+(``freq_serde.items_to_java_bytes``), the image Spark's built-in
+``approx_top_k_accumulate`` writes.
 """
 
 from __future__ import annotations
 
-import pickle
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -37,15 +40,12 @@ def a_priori_error(max_map_size: int, stream_weight: int) -> float:
 
 @dataclass
 class ItemsSketch:
+    # counters kept before a purge; an image records the smallest
+    # reference map whose capacity (0.75 x 2^lgMaxMapSize) holds them
     max_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE
     counts: dict = field(default_factory=dict)
     offset: int = 0  # max undercount of purged items
     stream_weight: int = 0
-
-    # purge down to 3/4 capacity like the reference load factor
-    @property
-    def _purge_at(self) -> int:
-        return self.max_map_size
 
     def update_batch(self, items, weights=None) -> "ItemsSketch":
         """Weighted batch update (LongsSketch.java:643,654)."""
@@ -61,7 +61,7 @@ class ItemsSketch:
         return self
 
     def _maybe_purge(self) -> None:
-        while len(self.counts) > self._purge_at:
+        while len(self.counts) > self.max_map_size:
             vals = np.fromiter(self.counts.values(), dtype=np.int64)
             med = int(np.median(vals))
             med = max(med, 1)
@@ -93,8 +93,9 @@ class ItemsSketch:
     def frequent_items(self, threshold: int | None = None,
                        error_type: str = NO_FALSE_POSITIVES) -> list[tuple]:
         """(item, estimate, lb, ub) rows, descending estimate
-        (LongsSketch.java:422,435)."""
-        t = threshold if threshold is not None else self.offset
+        (LongsSketch.java:422,435).  As in the reference, a threshold
+        below the maximum error (``offset``) is raised to it."""
+        t = max(threshold or 0, self.offset)
         rows = []
         for item, c in self.counts.items():
             lb, ub = c, c + self.offset
@@ -108,15 +109,12 @@ class ItemsSketch:
     def is_exact(self) -> bool:
         return self.offset == 0
 
-    # -- serde --------------------------------------------------------------
+    # -- serde: the reference's string ItemsSketch image -------------------
     def to_bytes(self) -> bytes:
-        return b"FQ01" + pickle.dumps(
-            (self.max_map_size, self.offset, self.stream_weight, self.counts),
-            protocol=4)
+        from .freq_serde import items_to_java_bytes
+        return items_to_java_bytes(self)
 
     @staticmethod
     def from_bytes(buf: bytes) -> "ItemsSketch":
-        if buf[:4] != b"FQ01":
-            raise ValueError("bad frequent-items image")
-        m, off, sw, counts = pickle.loads(buf[4:])
-        return ItemsSketch(m, counts, off, sw)
+        from .freq_serde import items_from_java_bytes
+        return items_from_java_bytes(buf)

@@ -264,15 +264,3 @@ def dissimilarity_test(a, b, threshold: float) -> bool:
     _, _, ub = jaccard(a, b)
     return ub <= threshold
 
-
-def fdt_estimate(keys_primary, keys_rest, lg_k: int = DEFAULT_LG_K,
-                 seed: int = DEFAULT_UPDATE_SEED):
-    """Frequent-distinct-tuples core idea (fdt/FdtSketch.java:49):
-    per primary-key group, a distinct-count of the remaining dims.
-    In Spark this is a pure groupBy composition (SURVEY.md §2.7);
-    this helper exists for parity tests only."""
-    from collections import defaultdict
-    groups = defaultdict(set)
-    for p, r in zip(keys_primary, keys_rest):
-        groups[p].add(r)
-    return {p: len(s) for p, s in groups.items()}

@@ -1,16 +1,14 @@
-"""Media ingestion sources → the multimodal binary-column schema.
+"""Media ingestion source → the multimodal binary-column schema.
 
-Two Spark built-in sources cover image ingestion at scale; both are
-file-granular-parallel (one task per file split, no driver loop):
-
-- ``binaryFile``: raw bytes + path metadata.  The scale path — media
-  bytes stay an opaque ``blob`` column decoded later by the
-  Arrow-batched operators in functions/multimodal.py (BMP/PNG/baseline
-  JPEG decode pure-numpy in-repo; the JVM never materializes pixels).
-- ``image``: the JVM decodes pixels via ImageIO at scan time.  Useful
-  for quick exploration and as the independent cross-check decoder
-  (tests/test_jpeg_codec.py), but it shuffles decoded pixel buffers —
-  at 10^12-document scale prefer ``read_media_binary``.
+``read_media_binary`` scans with Spark's built-in ``binaryFile``
+source: raw bytes + path metadata, file-granular-parallel (one task
+per file split, no driver loop).  Media bytes stay an opaque ``blob``
+column decoded later by the Arrow-batched operators in
+functions/multimodal.py (BMP/PNG/baseline JPEG decode pure-numpy
+in-repo; the JVM never materializes pixels).  Spark's ``image`` source
+(JVM ImageIO decode at scan time) is the independent cross-check
+decoder in tests/test_jpeg_codec.py; it shuffles decoded pixel
+buffers, so it is not the scale path.
 """
 
 from __future__ import annotations
@@ -34,15 +32,3 @@ def read_media_binary(spark: SparkSession, path: str,
                      F.col("length"),
                      F.col("modificationTime").alias("mod_ts"))
 
-
-def read_images_jvm(spark: SparkSession, path: str) -> DataFrame:
-    """Spark `image` source (JVM ImageIO decode at scan) →
-    (url, width, height, channels, mode, pixels_bgr).  Exploration /
-    cross-check path; see module docstring for the scale caveat."""
-    df = spark.read.format("image").load(path)
-    return df.select(F.col("image.origin").alias("url"),
-                     F.col("image.width").alias("width"),
-                     F.col("image.height").alias("height"),
-                     F.col("image.nChannels").alias("channels"),
-                     F.col("image.mode").alias("mode"),
-                     F.col("image.data").alias("pixels_bgr"))

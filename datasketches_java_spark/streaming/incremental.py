@@ -5,8 +5,8 @@ no time semantics); in Spark that maps to two shapes, both here:
 
 1. **Batch-incremental** (production shape for WARC crawls): new
    partitions are processed as a delta — anti-join against the
-   checkpointed id set, signatures computed only for new docs, sketch
-   state merged via sketch-column union (the update/merge algebra is
+   checkpointed id set (``delta_new_docs``), sketch state merged via
+   sketch-column union (the update/merge algebra is
    exactly what makes this correct: union(state, sketch(delta)) ==
    sketch(all)).
 2. **Structured Streaming**: `incremental_sketch_stream` wires the
@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_LG_K
 from ..functions.sketch_aggs import theta_sketch_agg, theta_union_agg
-from ..operators.lsh import add_signatures
 
 
 def delta_new_docs(all_pages: DataFrame, processed_ids: DataFrame,
@@ -33,23 +32,6 @@ def delta_new_docs(all_pages: DataFrame, processed_ids: DataFrame,
     checkpointed id set — SURVEY.md §7.8)."""
     return all_pages.join(processed_ids.select(id_col), on=id_col,
                           how="left_anti")
-
-
-def incremental_signatures(spark: SparkSession, pages: DataFrame,
-                           state_dir: str, id_col: str = "url",
-                           text_col: str = "text") -> DataFrame:
-    """Signature table maintained incrementally: compute only the
-    delta, append, return the full table."""
-    path = os.path.join(state_dir, "signatures")
-    have = os.path.exists(os.path.join(path, "_SUCCESS"))
-    if have:
-        state = spark.read.parquet(path)
-        delta = delta_new_docs(pages, state, id_col)
-    else:
-        state, delta = None, pages
-    sig = add_signatures(delta.select(id_col, text_col), text_col)
-    sig.write.mode("append").parquet(path)
-    return spark.read.parquet(path)
 
 
 def incremental_theta_state(spark: SparkSession, batch: DataFrame,

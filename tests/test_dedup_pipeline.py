@@ -99,6 +99,27 @@ def test_pipeline_checkpoint_resume(spark, pages, tmp_path):
     assert m.select("stage").distinct().count() >= 5
 
 
+def test_checkpoint_metrics_one_row_per_written_file(spark, tmp_path):
+    """Spark packs small files into one read split, so the metrics
+    group by the file a row was read from: one row per part file the
+    stage wrote, even when it wrote more than the session's
+    parallelism."""
+    import glob
+
+    from datasketches_java_spark.operators.checkpoint import CheckpointStore
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    n_files = 3 * spark.sparkContext.defaultParallelism
+    store.run_stage("s01", lambda: spark.range(0, 125 * n_files,
+                                               numPartitions=n_files)
+                    .withColumnRenamed("id", "doc_id"), lineage_col="doc_id")
+    parts = glob.glob(str(tmp_path / "ckpt" / "s01" / "data" / "part-*"))
+    assert len(parts) == n_files
+    rows = store.metrics("s01").orderBy("partition_id").collect()
+    assert [(r.partition_id, r.rows, r.lineage_min, r.lineage_max)
+            for r in rows] == [(i, 125, str(125 * i), str(125 * i + 124))
+                               for i in range(n_files)]
+
+
 def test_connected_components_basic(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9), (7, 6)], "id_a long, id_b long")

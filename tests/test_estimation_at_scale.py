@@ -74,16 +74,18 @@ def test_kll_items_estimation_rank_error(spark):
 
 
 def test_freq_purge_cycles_bounds(spark):
-    """Frequent-items at max_map_size=64 over 600k lineitem rows and
+    """Frequent-items tracking 64 items over 600k lineitem rows and
     1,000 distinct suppliers — hundreds of purge cycles.  Every
     reported estimate must obey est-eps*N <= true <= est with
     eps = 3.5/M (frequencies/ItemsSketch.java error model), and the
-    NO_FALSE_NEGATIVES view must cover every true heavy hitter."""
-    from datasketches_java_spark.functions.sketch_aggs import (
-        freq_sketch_agg)
+    NO_FALSE_NEGATIVES view must cover every true heavy hitter.  The
+    sketch is the one ``freq_sketch_agg`` builds, at 64 tracked items
+    instead of its 1,024."""
     from datasketches_java_spark.sketches.frequencies import ItemsSketch
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    img = freq_sketch_agg(li, "l_suppkey", max_map_size=64).first()[0]
+    img = li.agg(F.call_function(
+        "approx_top_k_accumulate", F.col("l_suppkey").cast("string"),
+        F.lit(64)).getField("sketch")).first()[0]
     sk = ItemsSketch.from_bytes(bytes(img))
     n = li.count()
     eps = 3.5 / 64

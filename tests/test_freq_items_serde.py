@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import os
+import pickle
+import struct
+
 import numpy as np
 import pytest
 
@@ -58,3 +62,39 @@ def test_rejections():
         items_from_java_bytes(bytes([1, 1, 7, 8, 3, 4, 0, 0]))
     with pytest.raises(ValueError, match="serVer"):
         items_from_java_bytes(bytes([1, 9, 10, 8, 3, 4, 0, 0]))
+    with pytest.raises(ValueError, match="lgMaxMapSize"):
+        items_from_java_bytes(bytes([1, 1, 10, 2, 3, 4, 0, 0]))
+    img = items_to_java_bytes(ItemsSketch(64).update_batch(["abc"]))
+    with pytest.raises(ValueError, match="truncated"):
+        items_from_java_bytes(img[:-1])
+    with pytest.raises(ValueError, match="activeItems"):
+        items_from_java_bytes(img[:8] + struct.pack("<i", -1) + img[12:])
+
+
+def test_non_string_items_are_keyed_by_their_string():
+    """Integer items (a Spark integer column) are written under their
+    string form, as the reference's string ItemsSketch holds them."""
+    sk = ItemsSketch(64).update_batch([1, 2, 2, 3])
+    back = items_from_java_bytes(items_to_java_bytes(sk))
+    assert back.counts == {"1": 1, "2": 2, "3": 1}
+    assert back.stream_weight == 4
+
+
+def test_legacy_pickle_image_is_never_unpickled(tmp_path):
+    """The retired ``b"FQ01" + pickle`` image raises a ValueError that
+    names it, before any byte of the pickle is loaded."""
+    marker = tmp_path / "unpickled"
+
+    class Payload:
+        def __reduce__(self):
+            return os.mkdir, (str(marker),)
+
+    img = b"FQ01" + pickle.dumps((1024, 0, 1, {"a": Payload()}), protocol=4)
+    for read in (ItemsSketch.from_bytes, items_from_java_bytes,
+                 from_java_bytes):
+        for buf in (img, bytearray(img)):
+            with pytest.raises(ValueError, match="FQ01"):
+                read(buf)
+    assert not marker.exists()
+    pickle.loads(img[4:])  # the payload does act when unpickled
+    assert marker.exists()

@@ -1,6 +1,6 @@
 """Interop with the datasketches-java jar Spark ships: the images of
-Spark's built-in theta/HLL/KLL aggregates read back in the engine, and
-the engine's images heapify in the JVM (reached as
+Spark's built-in theta/HLL/KLL/frequent-items aggregates read back in
+the engine, and the engine's images heapify in the JVM (reached as
 ``spark._jvm.org.apache.datasketches``) with the same answers."""
 
 from __future__ import annotations
@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from datasketches_java_spark.sketches import hll, theta, theta_serde
+from datasketches_java_spark.sketches.frequencies import (
+    NO_FALSE_NEGATIVES, NO_FALSE_POSITIVES, ItemsSketch)
 from datasketches_java_spark.sketches.kll import KllDoublesSketch
 
 INTERIOR_RANKS = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
@@ -99,6 +101,62 @@ def test_builtin_hll_registers_equal_engine(spark, dtype):
     else:
         want = hll.sketch_longs(np.arange(n), 12)
     assert np.array_equal(hll.HllSketch.from_bytes(img).regs, want.regs)
+
+
+# -- frequent items --------------------------------------------------------
+
+def _jvm_items(ds, img: bytes):
+    return ds.frequencies.ItemsSketch.getInstance(
+        _wrap(ds, img), ds.common.ArrayOfStringsSerDe())
+
+
+def _zipf_strings(seed: int, n: int, distinct: int) -> list[str]:
+    rng = np.random.default_rng(seed)
+    return [f"d{int(x)}" for x in rng.zipf(1.3, n) % distinct]
+
+
+@pytest.mark.parametrize("mode", ["exact", "purged"])
+def test_engine_freq_image_heapifies_in_jvm(ds, mode):
+    """The JVM holds the engine's counters unchanged (no purge on
+    heapify): active items, stream length, maximum error and every
+    item's lower and upper bound.  The image's map fits the engine's
+    64 counters (the JVM's capacity, 0.75 x 2^lgMaxMapSize), also with
+    60 of them in use."""
+    sk = (ItemsSketch(64).update_batch(
+              ["a"] * 5 + ["b"] * 3 + [f"i{i}" for i in range(58)])
+          if mode == "exact" else
+          ItemsSketch(64).update_batch(_zipf_strings(3, 5_000, 1_000)))
+    assert sk.is_exact == (mode == "exact")
+    j = _jvm_items(ds, sk.to_bytes())
+    assert j.getCurrentMapCapacity() <= j.getMaximumMapCapacity() >= 64
+    assert j.getNumActiveItems() == len(sk.counts)
+    assert j.getStreamLength() == sk.stream_weight
+    assert j.getMaximumError() == sk.offset
+    for item in sk.counts:
+        assert j.getLowerBound(item) == sk.lower_bound(item)
+        assert j.getUpperBound(item) == sk.upper_bound(item)
+    if mode == "exact":
+        assert j.getEstimate("a") == sk.estimate("a") == 5
+
+
+@pytest.mark.parametrize("error_type", [NO_FALSE_POSITIVES, NO_FALSE_NEGATIVES])
+def test_builtin_freq_image_reads_like_jvm(spark, ds, error_type):
+    """``freq_sketch_agg``'s image (Spark's ``approx_top_k_accumulate``,
+    purged here: 5,000 distinct items, 1,024 tracked) lists, in the
+    engine, the items and bounds the JVM's heapify of it lists, at
+    thresholds below, at and above the maximum error."""
+    from datasketches_java_spark.functions import sketch_aggs as A
+    df = spark.createDataFrame(
+        [(s,) for s in _zipf_strings(5, 30_000, 5_000)], "s string")
+    img = bytes(A.freq_sketch_agg(df, "s").first()["freq_sketch"])
+    sk, j = ItemsSketch.from_bytes(img), _jvm_items(ds, img)
+    assert sk.offset == j.getMaximumError() > 0
+    assert sk.stream_weight == j.getStreamLength() == 30_000
+    et = getattr(ds.frequencies.ErrorType, error_type)
+    for t in (0, sk.offset, sk.offset + 1, 100, 1_000):
+        want = {(r.getItem(), r.getEstimate(), r.getLowerBound(),
+                 r.getUpperBound()) for r in j.getFrequentItems(t, et)}
+        assert set(sk.frequent_items(t, error_type)) == want
 
 
 # -- theta -----------------------------------------------------------------

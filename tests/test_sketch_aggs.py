@@ -80,7 +80,7 @@ def test_kll_quantiles(spark, lineitem):
 
 def test_freq_exact_mode(spark, orders):
     out = SA.freq_sketch_agg(orders.withColumn("ck", F.col("o_custkey").cast("string")),
-                             "ck", max_map_size=2048)
+                             "ck")
     items = out.select(F.explode(SA.freq_items(5)("freq_sketch")).alias("it")) \
         .select("it.item", "it.estimate").collect()
     exact = {str(r["o_custkey"]): r["c"] for r in

@@ -112,6 +112,31 @@ def test_frequent_strings_roundtrip(sql):
     assert got == exact
 
 
+def test_frequent_strings_result_reads_builtin_image(sql, spark):
+    """frequent_strings_sketch_result reads the image Spark's
+    approx_top_k_accumulate writes to the items the SQL build's image
+    gives; the retired FQ01 image is an error naming it."""
+    import os
+
+    from pyspark.errors import PySparkException
+    row = sql("""
+        WITH b AS (SELECT approx_top_k_accumulate(o_orderpriority, 1024).sketch sk
+                   FROM orders),
+             e AS (SELECT frequent_strings_sketch_build(o_orderpriority) sk
+                   FROM orders)
+        SELECT frequent_strings_sketch_result(b.sk, 0) b,
+               frequent_strings_sketch_result(e.sk, 0) e
+        FROM b CROSS JOIN e""").first()
+    assert sorted(row["b"]) == sorted(row["e"]) and len(row["b"]) == 5
+    with open(os.path.join(os.path.dirname(__file__), "golden",
+                           "freq_zipf.sk"), "rb") as f:
+        spark.createDataFrame([(bytearray(f.read()),)], "sk binary") \
+            .createOrReplaceTempView("legacy_freq")
+    with pytest.raises(PySparkException, match="FQ01"):
+        sql("SELECT frequent_strings_sketch_result(sk, 0) FROM legacy_freq"
+            ).collect()
+
+
 def test_registry_returns_names(spark):
     names = register_sql_functions(spark)
     assert "theta_sketch_build" in names and len(names) >= 20
